@@ -20,14 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from connected_data_lake_spark.plans import all_specs  # noqa: E402
+from connected_data_lake_spark.plans import all_specs, spec_of  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     specs = all_specs()
-    # the flagship may carry the window-rotation prefix (plans/__init__.py)
-    name = "q1_pricing_summary" if "q1_pricing_summary" in specs else "z_q1_pricing_summary"
+    name = spec_of("q1_pricing_summary").name
     return specs[name].spark(spark, "/root/testdata/sf0.001")
 
 

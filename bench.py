@@ -45,7 +45,7 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    from connected_data_lake_spark.plans import all_specs
+    from connected_data_lake_spark.plans import all_specs, spec_of
     from connected_data_lake_spark.session import get_spark
 
     spark = get_spark("cdl-spark-bench")
@@ -60,9 +60,8 @@ def main() -> None:
     shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     specs = all_specs()
 
-    # warm-up: JVM, codegen, parquet footer caches (spec name is rotation-
-    # prefixed once the query turns driver-green — resolve either form)
-    warm = specs.get("q1_pricing_summary") or specs["z_q1_pricing_summary"]
+    # warm-up: JVM, codegen, parquet footer caches
+    warm = spec_of("q1_pricing_summary")
     warm.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
     # warm Python/Arrow workers: the FIRST pandas_udf stage in a session
     # pays worker spawn + numpy import (~3s); that's session start-up cost,

@@ -174,8 +174,6 @@ class CdlFS:
         self.cdl = cdl
         self.path = path
         self._registered = False
-        self._ordinal_cache: DataFrame | None = None
-        self._ordinal_version: int | None = None
 
     @property
     def spark(self) -> SparkSession:
@@ -240,9 +238,6 @@ class CdlFS:
         chunk = self.cdl.catalog.max_chunk_size if max_chunk_size is None else max_chunk_size
         df = rootfs_source.ingest_dir(self.spark, self.path.uri, max_chunk_size=chunk)
         rootfs_source.write_table(df, self.path.table_uri, mode="overwrite", bloom_cols=bloom_cols)
-        if self._ordinal_cache is not None:  # table changed: drop stale index
-            self._ordinal_cache.unpersist()
-            self._ordinal_cache = None
         self._register()
         return self
 
@@ -311,7 +306,7 @@ class CdlFS:
 
     def _ingest_external(self, df: DataFrame, src_desc: str) -> "CdlFS":
         """Shared ingress tail: validate rootfs shape, align types, land
-        in the native table, invalidate the ordinal index, re-register."""
+        in the native table, re-register."""
         from connected_data_lake_spark.sources.rootfs import ROOTFS_COLUMNS, ROOTFS_SCHEMA
 
         missing = [c for c in ROOTFS_COLUMNS if c not in df.columns]
@@ -323,9 +318,6 @@ class CdlFS:
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ROOTFS_SCHEMA.fields]
         )
         rootfs_source.write_table(aligned, self.path.table_uri, mode="overwrite")
-        if self._ordinal_cache is not None:  # table changed: drop stale index
-            self._ordinal_cache.unpersist()
-            self._ordinal_cache = None
         self._register()
         return self
 
@@ -536,10 +528,7 @@ class CdlFS:
             out = zorder_table(self.spark, self.path.table_uri, zorder_by, target_bytes)
         else:
             out = compact_table(self.spark, self.path.table_uri, target_bytes)
-        if out["version"] is not None:  # files changed: refresh view + index
-            if self._ordinal_cache is not None:
-                self._ordinal_cache.unpersist()
-                self._ordinal_cache = None
+        if out["version"] is not None:  # files changed: refresh the view
             self._register()
         return out
 
@@ -556,9 +545,6 @@ class CdlFS:
         else:
             out = delete_where(self.spark, self.path.table_uri, condition)
         if out["version"] is not None:
-            if self._ordinal_cache is not None:
-                self._ordinal_cache.unpersist()
-                self._ordinal_cache = None
             self._register()
         return out
 
@@ -571,9 +557,6 @@ class CdlFS:
 
         out = upsert_table(self.spark, self.path.table_uri, updates, key_cols)
         if out["version"] is not None:
-            if self._ordinal_cache is not None:
-                self._ordinal_cache.unpersist()
-                self._ordinal_cache = None
             self._register()
         return out
 
@@ -605,69 +588,21 @@ class CdlFS:
         """Random row access by ordinal (reference S12: Lance
         ``ds.take(indices, columns)``, python/examples/cdlake_lance_dataset.py:26-36).
 
-        Spark has no native row-ordinal point read, so ordinals are defined
-        over the table's canonical order (parent, name, chunk_id) and
-        materialized once as a persisted ordinal index (see
-        :meth:`_ordinal_table`); each ``take`` is then a filter over the
-        cached index — the Lance analogue of a persistent row-id index with
-        point reads against it. Entirely JVM-side: no RDD round-trip, no
-        Python serialization of payload bytes."""
-        idx = [int(i) for i in indices]
-        out = self._ordinal_table().filter(F.col("_rowid").isin(idx))
-        return out.select("_rowid", *columns).orderBy("_rowid")
-
-    def _ordinal_table(self) -> DataFrame:
-        """Build (once) and cache the ordinal-indexed table: contiguous
-        ``_rowid`` over the canonical (parent, name, chunk_id) order.
-
-        Global ordinals without a single-task global window: range-partition
-        on the sort key, number rows per partition with a window, then add
-        per-partition offsets (a partition-count-sized cumulative sum — the
-        only thing that ever reaches the driver is one count per partition).
-        Range repartitioning is deterministic for a given input, so the
-        count pass and the numbering pass see identical partition layouts.
-        At warehouse scale this index is a written table (bucketed by
-        ``_rowid`` range) rather than a session cache; persist() here plays
-        that role for the session-scoped API.
-
-        The cache is keyed by the table's COMMITTED VERSION, not a
-        per-instance flag — a second ``CdlFS`` on the same dataset can
-        commit DML this instance never sees, and serving ordinals over
-        the stale snapshot would silently return deleted rows."""
-        ver = self.version()
-        if getattr(self, "_ordinal_cache", None) is not None:
-            if self._ordinal_version == ver:
-                return self._ordinal_cache
-            self._ordinal_cache.unpersist()
-            self._ordinal_cache = None
-
+        Ordinals follow the table's canonical order (parent, name,
+        chunk_id): ``_rowid`` is ``row_number() - 1`` over that order,
+        computed on every call from this dataset's view, so a commit made
+        through any ``CdlFS`` on the same dataset is seen by the next take.
+        The unpartitioned window numbers rows in one task, which keeps the
+        ordinals exact. Entirely JVM-side: no RDD round-trip, no Python
+        serialization of payload bytes."""
         from pyspark.sql.window import Window
 
-        key = [F.col("parent"), F.col("name"), F.col("chunk_id")]
-        with_pid = (
-            self.table()
-            .repartitionByRange(*key)
-            .sortWithinPartitions(*key)
-            .withColumn("_pid", F.spark_partition_id())
-        )
-        # metadata-only collect: one (pid, count) row per partition
-        counts = with_pid.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
-        offsets, acc = [], 0
-        for r in sorted(counts, key=lambda r: r["_pid"]):
-            offsets.append((r["_pid"], acc))
-            acc += r["_n"]
-        off_df = self.spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
-        w = Window.partitionBy("_pid").orderBy(*key)
-        indexed = (
-            with_pid.withColumn("_lrn", F.row_number().over(w))
-            .join(F.broadcast(off_df), "_pid")
-            .withColumn("_rowid", (F.col("_off") + F.col("_lrn") - 1).cast("long"))
-            .drop("_pid", "_lrn", "_off")
-            .persist()
-        )
-        self._ordinal_cache = indexed
-        self._ordinal_version = ver
-        return indexed
+        idx = [int(i) for i in indices]
+        order = Window.orderBy("parent", "name", "chunk_id")
+        rowid = (F.row_number().over(order) - 1).cast("long")
+        indexed = self.table().withColumn("_rowid", rowid)
+        out = indexed.filter(F.col("_rowid").isin(idx))
+        return out.select("_rowid", *columns).orderBy("_rowid")
 
     # -- copy pipeline (S5/S6) ----------------------------------------------
 

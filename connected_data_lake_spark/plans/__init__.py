@@ -18,7 +18,7 @@ hash, so every spec obeys the canonicalization discipline (FIXTURES.md):
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -59,10 +59,8 @@ def query(
 
 
 def spec_of(name: str) -> QuerySpec:
-    """Resolve a declared query by its stable (unrotated) name: window
-    rotation prefixes driver-verified names with ``z_`` between rounds, and
-    callers (tests, docs) shouldn't have to track which round a query
-    turned green in."""
+    """Resolve a declared query by its stable name or by its exposed
+    ``z_`` name, so callers need not track which queries are rotated."""
     specs = all_specs()
     spec = specs.get(name) or specs.get(f"z_{name}")
     if spec is None:
@@ -70,135 +68,138 @@ def spec_of(name: str) -> QuerySpec:
     return spec
 
 
-#: Window rotation (round 2): the driver's correctness gate checks the first
-#: 50 queries ALPHABETICALLY each round. Round 1 verified these 34 queries
-#: green (rows+schema+hash in CORRECTNESS_r01.json); they now cede their
-#: window slot to the 34 never-checked queries (window_*/setop_*/subquery_*/
-#: rootfs_*/text_*/multimodal_*/q1/topk/orderby/scan) plus the 7 repaired
-#: ones by taking a ``z_`` name prefix — query bodies and oracles are
-#: UNCHANGED, only the registry key rotates. Union of green rows across
-#: rounds covers every family.
-ROTATED_GREEN_R01 = frozenset(
+#: Stable names of the queries exposed under a ``z_`` prefix. The external
+#: correctness gate checks only the first 50 names alphabetically, so a
+#: query that has already passed it is renamed ``z_<name>`` to make room
+#: for the ones that have not. Changing a query's body or oracle removes
+#: its name from this set until it passes the gate again;
+#: ``tools/rotate_window.py`` prints the next set from a CORRECTNESS file.
+ROTATED = frozenset(
     {
+        "agg_array_sorted",
+        "agg_bitwise_bool",
         "agg_corr_covar",
         "agg_cube",
         "agg_filter_having",
         "agg_global_stats",
         "agg_group_distinct",
         "agg_grouping_sets",
-        # agg_median_percentile un-rotated in round 7: body replaced by the
-        # scale-safe shape (see ROTATED_GREEN_R06 note) -> re-enters window
+        "agg_histogram_buckets",
+        "agg_hll_partial_merge",
+        "agg_mode_pergroup",
         "agg_rollup",
+        "agg_skew_kurtosis",
         "agg_stddev_var",
+        "agg_string_concat",
         "agg_sum_revenue",
-        "distinct_projection",
-        "events_daily_top_users",
-        "events_funnel_transitions",
-        "events_sliding_halfhour",
-        "events_tumbling_hourly",
-        "fn_cast",
-        "fn_conditional",
-        "fn_date_bin",
-        "fn_datetime",
-        "fn_encoding",
-        "fn_explode_unnest",
-        "fn_hash",
-        "fn_math",
-        "fn_regex",
-        "fn_string",
-        "fn_unicode",
-        "join_anti",
-        "join_cross",
-        "join_full_outer",
-        "join_inner_broadcast",
-        "join_left_outer",
-        "join_semi",
-        "join_theta_range",
-        "limit_offset",
-    }
-)
-
-
-#: Window rotation (round 5): these queries were verified green in
-#: CORRECTNESS_r04.json; they cede their slots (→ ``z_`` prefix) so the
-#: flagship compositions — which sorted last as ``zz_*`` and never received
-#: a driver correctness row — plus the new probe-only IVF query and the
-#: round-5 additions (pack_sequences, chunking, tf-idf, and the rest of the
-#: curation family) fit inside the 50-query alphabetical window. Bodies and
-#: oracles unchanged.
-ROTATED_GREEN_R04 = frozenset(
-    {
-        # agg_array_sorted rotated mid-round-5: it was verified green in
-        # CORRECTNESS_r04.json and cedes its slot so the new
-        # dedup_incremental query lands inside the 50-query window without
-        # pushing the (still-unverified) round-5 tail out
-        "agg_array_sorted",
-        "window_row_number",
-        "window_running_sum",
-        "window_sliding_avg",
-        "agg_approx_distinct",
-        "setop_union_all",
-        "setop_union_distinct",
-        "setop_intersect",
-        "setop_except",
-    }
-)
-
-#: Round-5 promotions: drop the ``zz_`` window-deferral prefix (see the
-#: r2-r4 rotation history above) so the flagship compositions finally enter
-#: the driver's correctness window. Registry-level rename only — the query
-#: bodies, oracles and tags are untouched; bench history for the old names
-#: lives in BENCH_r0{2,4}.json.
-PROMOTED_R05 = {
-    "zz_pipeline_training_data": "pipeline_training_data",
-    "zz_join_bucketed_colocated": "join_bucketed_colocated",
-    # The four round-5 curation queries enter the window immediately rather
-    # than waiting a round: the four tail queries they displace
-    # (window_lag_lead / window_ntile_pct / window_range_frame /
-    # window_rank_dense) were all driver-verified green in
-    # CORRECTNESS_r04.json, so union coverage loses nothing while the new
-    # work gains a driver correctness row in its first round.
-    "zz_split_train_test": "split_train_test",
-    "zz_sample_stratified": "sample_stratified",
-    "zz_text_repetition": "text_repetition",
-    "zz_contamination_overlap": "contamination_overlap",
-}
-
-
-#: Window rotation (round 6): verified green in CORRECTNESS_r05.json (the
-#: 49 passes of round 5) plus the 7 round-4 greens that sorted past the
-#: round-5 window's tail (text_token_estimate, topk_orders, the five
-#: window_* queries — all rows+schema+hash green in CORRECTNESS_r04.json).
-#: They cede their slots so the 8 round-5 ``zz_``-deferred queries and the
-#: repaired probe trio (now carrying recall-contract oracles) land inside
-#: the driver's 50-query alphabetical window. Bodies and oracles unchanged.
-ROTATED_GREEN_R05 = frozenset(
-    {
         "contamination_overlap",
-        "dedup_cluster_assign",
+        "curation_dsir_weights",
+        "dedup_containment",
         "dedup_embedding_neardup",
         "dedup_exact_survivors",
         "dedup_incremental",
         "dedup_minhash_lsh",
         "dedup_ngram_jaccard",
         "dedup_simhash",
+        "delta_column_mapping_read",
+        "delta_external_read",
+        "delta_time_travel",
+        "delta_write_roundtrip",
+        "delta_write_time_travel",
+        "delta_zorder_pruned_read",
+        "distinct_projection",
+        "embedding_outlier_zscore",
+        "embedding_pca_contract",
         "embedding_quantize_int8",
         "embedding_stats",
+        "events_daily_top_users",
+        "events_funnel_attribution",
+        "events_funnel_transitions",
+        "events_gap_stats",
+        "events_ohlc_minutely",
+        "events_peak_concurrency",
+        "events_rate_anomaly",
+        "events_retention_cohorts",
         "events_session_gap30m",
+        "events_sessionize_alerts",
+        "events_sliding_halfhour",
+        "events_time_weighted_avg",
+        "events_trending_topk",
+        "events_tumbling_hourly",
+        "events_user_profile",
+        "events_value_autocorr",
         "fn_array",
+        "fn_array_extras",
+        "fn_bitwise",
+        "fn_cast",
+        "fn_conditional",
+        "fn_date_bin",
+        "fn_datetime",
+        "fn_datetime_format",
+        "fn_encoding",
+        "fn_explode_unnest",
+        "fn_hash",
+        "fn_interval_arith",
         "fn_json",
+        "fn_levenshtein_pairs",
+        "fn_map_struct",
+        "fn_math",
+        "fn_math_extras",
+        "fn_misc_null",
+        "fn_regex",
+        "fn_string",
+        "fn_string_extras",
+        "fn_unicode",
+        "gap_fill_daily",
+        "graph_triangle_count",
+        "iceberg_incremental_read",
+        "join_anti",
         "join_asof_events",
         "join_bucketed_colocated",
+        "join_cooccurrence",
+        "join_cross",
+        "join_full_outer",
+        "join_inner_broadcast",
+        "join_left_outer",
         "join_multiway_q5",
+        "join_range_binned",
+        "join_semi",
+        "join_theta_range",
+        "knn_centroid_classify",
         "knn_cosine_topk",
-        "knn_ivf_topk",
-        "knn_sketch_topk",
+        "knn_sketch_probe",
+        "knn_threshold_search",
+        "limit_offset",
+        "merge_upsert_orders",
         "multimodal_decode_meta",
         "multimodal_frame_sample",
+        "multimodal_resize",
         "orderby_nulls",
-        "pack_sequences",
-        "pipeline_training_data",
+        "pipeline_rag_corpus",
+        "pivot_status_matrix",
+        "profile_orders",
+        "q10_returned_revenue",
+        "q11_important_stock",
+        "q12_late_lines",
+        "q13_order_distribution",
+        "q14_promo_revenue",
+        "q15_top_supplier",
+        "q16_parts_suppliers",
+        "q17_small_quantity",
+        "q18_big_orders",
+        "q19_disjunctive_revenue",
         "q1_pricing_summary",
+        "q20_promotion_suppliers",
+        "q21_waiting_supplier",
+        "q22_dormant_customers",
+        "q2_min_cost_supplier",
+        "q3_shipping_priority",
+        "q4_priority_late",
+        "q6_forecast_revenue",
+        "q7_nation_volume",
+        "q8_market_share",
+        "q9_product_profit",
+        "quality_expectations",
         "rootfs_chunked",
         "rootfs_condition_splice",
         "rootfs_len_udf",
@@ -206,721 +207,61 @@ ROTATED_GREEN_R05 = frozenset(
         "rootfs_read_dir_all",
         "sample_mixture_rebalance",
         "sample_stratified",
+        "sample_weighted_priority",
         "scan_filter_project",
+        "scd2_event_history",
+        "setop_except",
         "setop_except_all",
+        "setop_intersect",
         "setop_intersect_all",
+        "setop_symmetric_diff",
+        "setop_union_all",
+        "setop_union_distinct",
         "split_train_test",
+        "stats_chisq_lang_source",
         "subquery_correlated_exists",
         "subquery_correlated_scalar",
         "subquery_in",
         "subquery_scalar",
+        "text_bigram_top",
+        "text_bm25_topk",
+        "text_boilerplate_ratio",
         "text_chunk_overlap",
+        "text_dup_rate_by_source",
         "text_fingerprint",
-        "text_language_guess",
+        "text_heavy_hitters",
+        "text_logprob_bigram",
         "text_logprob_unigram",
-        # text_pii_scrub un-rotated in round 8: spread() added to its body
-        # (scan-parallelism fix) -> re-enters the window
+        "text_ngram_novelty",
+        "text_pii_scrub",
+        "text_pmi_collocations",
         "text_quality_score",
-        # text_repetition un-rotated in round 8: spread() added to its body
-        # (scan-parallelism fix) -> re-enters the window
+        "text_repeated_spans",
+        "text_repetition",
         "text_stats",
-        # text_tfidf_keywords un-rotated in round 8: persists removed from
-        # its body (measured regression fix, VERDICT r7 next-round #6) ->
-        # re-enters the window for re-verification
-        # round-4 greens that sorted past round 5's window tail
+        "text_tfidf_keywords",
         "text_token_estimate",
+        "text_zipf_slope",
         "topk_orders",
+        "topk_per_group",
+        "unpivot_nation_metrics",
+        "window_cume_pctrank",
         "window_first_last_nth",
         "window_lag_lead",
         "window_ntile_pct",
         "window_range_frame",
         "window_rank_dense",
-    }
-)
-
-#: NEXT-ROUND ROTATION RECIPE (mechanical): run ``tools/rotate_window.py
-#: CORRECTNESS_r0N.json`` and paste its frozenset. Names are listed as
-#: STABLE names — ``zz_`` promotion aliases resolved, and WITHOUT any
-#: ``z_`` rotation prefix (rotate_window.py strips it): the membership
-#: test below runs on the pre-rotation name, so a pasted ``z_foo`` entry
-#: would silently never match and the query would re-enter the window.
-#: Wire the new set into the membership test in all_specs() and confirm
-#: the freed window slots pull the next unverified tail inside the first
-#: 50 alphabetical names. Cross-round union stays monotone because
-#: rotation renames keys only — bodies and oracles never change in a
-#: rotation commit.
-
-#: Round-6 promotions: drop the ``zz_`` window-deferral prefix from the
-#: round-5 additions that never received a driver correctness row (VERDICT
-#: r5 "What's missing" #1). Registry-level rename only — bodies, oracles
-#: and tags untouched; bench history for the old names lives in
-#: BENCH_r05.json.
-PROMOTED_R06 = {
-    "zz_dedup_containment": "dedup_containment",
-    "zz_events_retention_cohorts": "events_retention_cohorts",
-    "zz_knn_centroid_classify": "knn_centroid_classify",
-    "zz_knn_pq_probe": "knn_pq_probe",
-    "zz_knn_pq_topk": "knn_pq_topk",
-    "zz_knn_sketch_probe": "knn_sketch_probe",
-    "zz_text_logprob_bigram": "text_logprob_bigram",
-    "zz_text_repeated_spans": "text_repeated_spans",
-}
-
-
-#: Window rotation (round 7): the 37 round-6 additions verified green in
-#: CORRECTNESS_r06.json (rows+schema+hash, zero err). The 13 z_-prefixed
-#: names in that file re-verified earlier rotations and are already members
-#: of R01/R04/R05 — with one exception: ``agg_median_percentile`` is
-#: REMOVED from ROTATED_GREEN_R01 below because round 7 replaces its body
-#: with the scale-safe pre-aggregated-counts shape (VERDICT r6 "What's
-#: wrong" #1); a body change forfeits the rotation slot and the query
-#: re-enters the driver window for re-verification.
-ROTATED_GREEN_R06 = frozenset(
-    {
-        "agg_histogram_buckets",
-        "agg_mode_pergroup",
-        "agg_string_concat",
-        "dedup_containment",
-        "embedding_outlier_zscore",
-        "events_funnel_attribution",
-        "events_gap_stats",
-        "events_retention_cohorts",
-        "fn_bitwise",
-        "fn_interval_arith",
-        "fn_levenshtein_pairs",
-        "gap_fill_daily",
-        "join_cooccurrence",
-        # join_range_binned un-rotated in round 8: point-side span
-        # pre-filter added to its body -> re-enters the window
-        "join_salted_skew",
-        "knn_centroid_classify",
-        "knn_ivf_probe",
-        "knn_pq_probe",
-        "knn_pq_topk",
-        "knn_sketch_probe",
-        "multimodal_resize",
-        "pipeline_rag_corpus",
-        "pivot_status_matrix",
-        "q12_late_lines",
-        "q14_promo_revenue",
-        "q3_shipping_priority",
-        "q6_forecast_revenue",
-        "setop_symmetric_diff",
-        # text_bigram_top un-rotated in round 8: spread() added to its body
-        # (scan-parallelism fix) -> re-enters the window
-        "text_dup_rate_by_source",
-        # text_logprob_bigram un-rotated in round 8: spread() added to its body
-        # (scan-parallelism fix) -> re-enters the window
-        "text_repeated_spans",
-        "text_zipf_slope",
-        "topk_per_group",
-        "unpivot_nation_metrics",
-        "window_cume_pctrank",
+        "window_row_number",
+        "window_running_sum",
         "window_share_of_total",
+        "window_sliding_avg",
     }
 )
-
-
-#: Window rotation (round 8): verified green in CORRECTNESS_r07.json.
-#: ``fn_math_extras`` and ``fn_datetime_format`` are NOT members despite
-#: their r7 green rows: round 8 changed their bodies (lcm now uses exact
-#: integer division; the epoch_ts oracle is now TZ-independent), and a
-#: body/oracle change forfeits the rotation slot - both re-enter the
-#: driver window for re-verification.
-#: (rows+schema+hash). The 17 round-7 newcomers (q4/q7/q10/q18/q19/q22,
-#: BM25, range search, the fn_* extras, the stream batch twins, and the
-#: re-verified scale-safe ``agg_median_percentile``) join the re-verified
-#: earlier rotations (already members of R01/R04/R05/R06 — membership is an
-#: OR, duplicates are harmless). ``fn_array_extras`` stays in the window:
-#: its r7 row was ``err`` (raw array columns broke the driver canonicalizer)
-#: and its body was repaired this round, so it re-presents for
-#: verification. Bodies and oracles unchanged by this rotation commit.
-ROTATED_GREEN_R07 = frozenset(
-    {
-        "agg_approx_distinct",
-        "agg_array_sorted",
-        "agg_corr_covar",
-        "agg_cube",
-        "agg_filter_having",
-        "agg_global_stats",
-        "agg_group_distinct",
-        "agg_grouping_sets",
-        "agg_histogram_buckets",
-        "agg_median_percentile",
-        "agg_mode_pergroup",
-        "agg_percentile_approx",
-        "agg_rollup",
-        "agg_stddev_var",
-        "agg_string_concat",
-        "agg_sum_revenue",
-        "contamination_overlap",
-        "dedup_cluster_assign",
-        "dedup_containment",
-        "dedup_embedding_neardup",
-        "dedup_exact_survivors",
-        "dedup_incremental",
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "distinct_projection",
-        "embedding_outlier_zscore",
-        "embedding_quantize_int8",
-        "embedding_stats",
-        "events_daily_top_users",
-        "events_funnel_attribution",
-        "events_funnel_transitions",
-        "events_gap_stats",
-        "events_rate_anomaly",
-        "events_retention_cohorts",
-        "events_sessionize_alerts",
-        "events_trending_topk",
-        "fn_misc_null",
-        "fn_string_extras",
-        "knn_threshold_search",
-        "q10_returned_revenue",
-        "q18_big_orders",
-        "q19_disjunctive_revenue",
-        "q22_dormant_customers",
-        "q4_priority_late",
-        "q7_nation_volume",
-        "text_bm25_topk",
-    }
-)
-
-
-#: Window rotation (round 9): verified green in CORRECTNESS_r08.json
-#: (50/50 window rows green, rows+schema+hash, no err). Three r8-green
-#: names are deliberately NOT members because round 9 changes their
-#: bodies (a body change forfeits the rotation slot — they re-enter the
-#: driver window for re-verification):
-#:   - ``sample_weighted_priority`` (priority key now rounded to 9 dp on
-#:     both engines before ROW_NUMBER, closing the 1-ulp cross-engine
-#:     rank-flip risk flagged in ADVICE r8),
-#:   - ``graph_triangle_count`` (empty-edge-relation guard),
-#:   - ``text_heavy_hitters`` (verify pass now a broadcast semi join on a
-#:     candidates DataFrame instead of a driver-side literal IN list).
-#: ``dedup_containment`` is likewise REMOVED from ROTATED_GREEN_R07 above
-#: membership via this round's max_df port — handled by the exclusion set
-#: below rather than editing the historical frozenset.
-ROTATED_GREEN_R08 = frozenset(
-    {
-        "agg_bitwise_bool",
-        "agg_hll_partial_merge",
-        "agg_skew_kurtosis",
-        "cluster_kmeans_embeddings",
-        "curation_dsir_weights",
-        "curation_semdedup",
-        "dedup_cluster_star",
-        "embedding_pca_contract",
-        "events_anomaly_mad",
-        "events_ohlc_minutely",
-        "events_peak_concurrency",
-        "events_time_weighted_avg",
-        "events_user_profile",
-        "events_value_autocorr",
-        "fn_array_extras",
-        "fn_datetime_format",
-        "fn_map_struct",
-        "fn_math_extras",
-        "graph_pagerank_trade",
-        "join_range_binned",
-        "merge_upsert_orders",
-        "profile_orders",
-        "q11_important_stock",
-        "q13_order_distribution",
-        "q15_top_supplier",
-        "q16_parts_suppliers",
-        "q17_small_quantity",
-        "q20_promotion_suppliers",
-        "q21_waiting_supplier",
-        "q2_min_cost_supplier",
-        "q8_market_share",
-        "q9_product_profit",
-        "quality_expectations",
-        "scd2_event_history",
-        "stats_chisq_lang_source",
-        "stats_ks_two_sample",
-        "stats_psi_value_drift",
-        "text_bigram_top",
-        "text_boilerplate_ratio",
-        "text_logprob_bigram",
-        "text_ngram_novelty",
-        "text_pii_scrub",
-        "text_pmi_collocations",
-        "text_repetition",
-        "text_tfidf_keywords",
-    }
-)
-
-#: HISTORICAL (round 9): names whose bodies changed in round 9 after an
-#: earlier green row. All six re-passed in CORRECTNESS_r09 and now sit in
-#: ROTATED_GREEN_R09, so this set no longer participates in the rotation
-#: check — it is kept as the documented record of the r9 re-verification.
-REVERIFY_R09 = frozenset(
-    {
-        "dedup_containment",  # max_df df-cap + prefix filter port (r8 verdict #3)
-        "sample_weighted_priority",  # 9-dp priority-key rounding (ADVICE r8)
-        "graph_triangle_count",  # empty-edge guard (ADVICE r8)
-        "text_heavy_hitters",  # broadcast semi-join verify pass (ADVICE r8)
-        # hybrid contraction cut in connected_components: at driver-check
-        # scale the pair remnant takes the new driver-side union-find
-        # finish, a materially different executed path — both cluster
-        # queries re-present (graph_pagerank_trade's only change is an
-        # inert release-registration call; it keeps its slot)
-        "dedup_cluster_assign",
-        "dedup_cluster_star",
-    }
-)
-
-#: Driver-green rows from CORRECTNESS_r09 (50/50 in-window pass) under
-#: their FINAL driver-visible names (``tools/rotate_window.py
-#: CORRECTNESS_r09.json``). Includes the six REVERIFY_R09 names — their
-#: changed bodies re-passed in the r9 window — plus the two new Delta
-#: queries and the agg/dedup/events tail the window reached.
-ROTATED_GREEN_R09 = frozenset(
-    {
-        "dedup_cluster_assign",
-        "dedup_cluster_star",
-        "dedup_containment",
-        "delta_external_read",
-        "delta_time_travel",
-        "graph_triangle_count",
-        "sample_weighted_priority",
-        "text_heavy_hitters",
-        "agg_approx_distinct",
-        "agg_array_sorted",
-        "agg_bitwise_bool",
-        "agg_corr_covar",
-        "agg_cube",
-        "agg_filter_having",
-        "agg_global_stats",
-        "agg_group_distinct",
-        "agg_grouping_sets",
-        "agg_histogram_buckets",
-        "agg_hll_partial_merge",
-        "agg_median_percentile",
-        "agg_mode_pergroup",
-        "agg_percentile_approx",
-        "agg_rollup",
-        "agg_skew_kurtosis",
-        "agg_stddev_var",
-        "agg_string_concat",
-        "agg_sum_revenue",
-        "cluster_kmeans_embeddings",
-        "contamination_overlap",
-        "curation_dsir_weights",
-        "curation_semdedup",
-        "dedup_embedding_neardup",
-        "dedup_exact_survivors",
-        "dedup_incremental",
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "distinct_projection",
-        "embedding_outlier_zscore",
-        "embedding_pca_contract",
-        "embedding_quantize_int8",
-        "embedding_stats",
-        "events_anomaly_mad",
-        "events_daily_top_users",
-        "events_funnel_attribution",
-        "events_funnel_transitions",
-        "events_gap_stats",
-        "events_ohlc_minutely",
-        "events_peak_concurrency",
-        "events_rate_anomaly",
-    }
-)
-
-#: Names whose bodies change in round 10 AFTER an earlier green row: they
-#: forfeit any rotation-set membership (the OR below is masked by this
-#: set) and re-enter the driver's 50-name window for re-verification.
-#: Round-10 operator edits audited as result-INERT (no mask needed, per
-#: the r9 "inert release-registration call" precedent): graph.py swaps
-#: the ad-hoc ``_cdl_cc_rounds`` DataFrame attribute for a module-level
-#: diagnostics record (driver-side bookkeeping, identical plan), and
-#: dedup.py's session index registry became opt-in (cache LIFECYCLE under
-#: bench only; every query's executed plan and results are unchanged —
-#: the full sf0.001 oracle suite re-ran green after both edits).
-REVERIFY_R10: frozenset[str] = frozenset()
-
-#: Driver-green rows from CORRECTNESS_r10 (50/50 in-window pass) that were
-#: not already members of an earlier rotation set — the two new external
-#: Iceberg queries; the other 48 r10 rows were re-verifications of names
-#: already rotated in R01–R09.
-ROTATED_GREEN_R10 = frozenset(
-    {
-        "iceberg_external_read",
-        "iceberg_time_travel",
-    }
-)
-
-#: HISTORICAL (round 11): names whose driver-observable behavior changed
-#: in round 11 after an earlier green row (scope per VERDICT r10 #8:
-#: body/oracle, SQL-rewriting library, or executed-plan-shape change).
-#: Both re-passed in CORRECTNESS_r11 and now sit in ROTATED_GREEN_R11 —
-#: this set no longer participates in the rotation check; kept as the
-#: documented record of the r11 re-verification. ADVICE r11 #4 asked
-#: whether ``delta_external_read``/``delta_time_travel`` (whose read path
-#: round 11 also rewrote) should have re-entered too: they did not need a
-#: mask because the alphabetical window reached their rotated names
-#: anyway — CORRECTNESS_r11 carries green ``z_delta_external_read`` /
-#: ``z_delta_time_travel`` rows over the rewritten path.
-REVERIFY_R11 = frozenset(
-    {
-        "iceberg_external_read",
-        "iceberg_time_travel",
-    }
-)
-
-#: Driver-green rows from CORRECTNESS_r11 (50/50 in-window pass,
-#: ``tools/rotate_window.py CORRECTNESS_r11.json``) under their stable
-#: names: the three new reader queries (delta_column_mapping_read,
-#: iceberg_pruned_read, iceberg_mor_read), the two REVERIFY_R11 names
-#: re-passed over the rewired Iceberg path, the two Delta queries
-#: re-passed over the rewired Delta path, and the agg/dedup/embedding/
-#: events tail the window re-verified.
-ROTATED_GREEN_R11 = frozenset(
-    {
-        "delta_column_mapping_read",
-        "iceberg_external_read",
-        "iceberg_mor_read",
-        "iceberg_pruned_read",
-        "iceberg_time_travel",
-        "agg_approx_distinct",
-        "agg_array_sorted",
-        "agg_bitwise_bool",
-        "agg_corr_covar",
-        "agg_cube",
-        "agg_filter_having",
-        "agg_global_stats",
-        "agg_group_distinct",
-        "agg_grouping_sets",
-        "agg_histogram_buckets",
-        "agg_hll_partial_merge",
-        "agg_median_percentile",
-        "agg_mode_pergroup",
-        "agg_percentile_approx",
-        "agg_rollup",
-        "agg_skew_kurtosis",
-        "agg_stddev_var",
-        "agg_string_concat",
-        "agg_sum_revenue",
-        "cluster_kmeans_embeddings",
-        "contamination_overlap",
-        "curation_dsir_weights",
-        "curation_semdedup",
-        "dedup_cluster_assign",
-        "dedup_cluster_star",
-        "dedup_containment",
-        "dedup_embedding_neardup",
-        "dedup_exact_survivors",
-        "dedup_incremental",
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "delta_external_read",
-        "delta_time_travel",
-        "distinct_projection",
-        "embedding_outlier_zscore",
-        "embedding_pca_contract",
-        "embedding_quantize_int8",
-        "embedding_stats",
-        "events_anomaly_mad",
-        "events_daily_top_users",
-        "events_funnel_attribution",
-        "events_funnel_transitions",
-        "events_gap_stats",
-        "events_ohlc_minutely",
-    }
-)
-
-#: Names whose DRIVER-OBSERVABLE behavior changes in round 12 after an
-#: earlier green row (same extended scope as REVERIFY_R11: body/oracle,
-#: SQL-rewriting library, or executed-plan-shape change). Round 12
-#: rewrites BOTH external readers' executed paths again — Delta gains
-#: deletion-vector application and v2-checkpoint replay (sources/delta.py
-#: ``_replay``/``read_delta``), Iceberg gains type-safe identity pruning
-#: (ADVICE r11 #1), per-relation metadata-column projection in
-#: ``_read_mapped`` (ADVICE r11 #2), per-column name fallback + rename
-#: gates (ADVICE r11 #3/#5), transform pruning, equality deletes, and a
-#: size-gated delete anti-join — so every delta_*/iceberg_* query
-#: re-enters the driver window for re-verification.
-REVERIFY_R12 = frozenset(
-    {
-        "delta_column_mapping_read",
-        "delta_external_read",
-        "delta_time_travel",
-        "iceberg_external_read",
-        "iceberg_mor_read",
-        "iceberg_pruned_read",
-        "iceberg_time_travel",
-    }
-)
-
-#: Driver-green rows from CORRECTNESS_r12 (50/50 in-window pass,
-#: ``tools/rotate_window.py CORRECTNESS_r12.json``) under their stable
-#: names: the two new reader queries (delta_dv_read,
-#: iceberg_eq_delete_read), the seven REVERIFY_R12 reader names re-passed
-#: over the r12-rewritten paths, and the agg/cluster/curation/dedup/
-#: distinct/embedding/events tail the window re-verified. Names already in
-#: earlier ROTATED_GREEN sets are repeated here harmlessly (membership is
-#: a union); the set records exactly what the r12 driver verified.
-ROTATED_GREEN_R12 = frozenset(
-    {
-        "delta_column_mapping_read",
-        "delta_dv_read",
-        "delta_external_read",
-        "delta_time_travel",
-        "iceberg_eq_delete_read",
-        "iceberg_external_read",
-        "iceberg_mor_read",
-        "iceberg_pruned_read",
-        "iceberg_time_travel",
-        "agg_approx_distinct",
-        "agg_array_sorted",
-        "agg_bitwise_bool",
-        "agg_corr_covar",
-        "agg_cube",
-        "agg_filter_having",
-        "agg_global_stats",
-        "agg_group_distinct",
-        "agg_grouping_sets",
-        "agg_histogram_buckets",
-        "agg_hll_partial_merge",
-        "agg_median_percentile",
-        "agg_mode_pergroup",
-        "agg_percentile_approx",
-        "agg_rollup",
-        "agg_skew_kurtosis",
-        "agg_stddev_var",
-        "agg_string_concat",
-        "agg_sum_revenue",
-        "cluster_kmeans_embeddings",
-        "contamination_overlap",
-        "curation_dsir_weights",
-        "curation_semdedup",
-        "dedup_cluster_assign",
-        "dedup_cluster_star",
-        "dedup_containment",
-        "dedup_embedding_neardup",
-        "dedup_exact_survivors",
-        "dedup_incremental",
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "distinct_projection",
-        "embedding_outlier_zscore",
-        "embedding_pca_contract",
-        "embedding_quantize_int8",
-        "embedding_stats",
-        "events_anomaly_mad",
-        "events_daily_top_users",
-        "events_funnel_attribution",
-        "events_funnel_transitions",
-    }
-)
-
-#: HISTORICAL (round 13): names whose driver-observable behavior changed
-#: in round 13 after an earlier green row. All nine re-passed in
-#: CORRECTNESS_r13 and now sit in ROTATED_GREEN_R13 — this set no longer
-#: participates in the rotation check. Round 13
-#: touches both external readers again — Delta gains within-version
-#: remove-before-add action reconciliation keyed by (path, dv uniqueId)
-#: (ADVICE r12 #1), a null-safe DV offset parse (ADVICE r12 #4), and a
-#: bitmap-container-capable RoaringBitmapArray encoder feeding the
-#: delta_dv_read fixture; Iceberg gains strict id-only footer resolution
-#: for id-carrying files (ADVICE r12 #2) and field-id resolution of
-#: equality-delete files (ADVICE r12 #3) — so every delta_*/iceberg_*
-#: query re-enters the driver window for re-verification.
-REVERIFY_R13 = frozenset(
-    {
-        "delta_column_mapping_read",
-        "delta_dv_read",
-        "delta_external_read",
-        "delta_time_travel",
-        "iceberg_eq_delete_read",
-        "iceberg_external_read",
-        "iceberg_mor_read",
-        "iceberg_pruned_read",
-        "iceberg_time_travel",
-    }
-)
-
-
-#: Driver-green rows from CORRECTNESS_r13 (50/50 in-window pass,
-#: ``tools/rotate_window.py CORRECTNESS_r13.json``) under their stable
-#: names: the 30 lake-format rows (all of delta/iceberg/hudi read+write+
-#: DML+incremental plus lakesync_delta_roundtrip — 20 of them first-time
-#: greens) and the agg/cluster tail the window re-verified.
-ROTATED_GREEN_R13 = frozenset(
-    {
-        "delta_cdf_read",
-        "delta_column_mapping_read",
-        "delta_dml_roundtrip",
-        "delta_dv_dml_roundtrip",
-        "delta_dv_read",
-        "delta_external_read",
-        "delta_merge_roundtrip",
-        "delta_time_travel",
-        "delta_write_roundtrip",
-        "delta_write_time_travel",
-        "delta_zorder_pruned_read",
-        "hudi_external_read",
-        "hudi_incremental_read",
-        "hudi_mor_dml_roundtrip",
-        "hudi_mor_read",
-        "hudi_mor_time_travel",
-        "hudi_time_travel",
-        "hudi_write_roundtrip",
-        "iceberg_dml_roundtrip",
-        "iceberg_eq_delete_read",
-        "iceberg_eq_dml_roundtrip",
-        "iceberg_external_read",
-        "iceberg_incremental_read",
-        "iceberg_mor_dml_roundtrip",
-        "iceberg_mor_read",
-        "iceberg_pruned_read",
-        "iceberg_time_travel",
-        "iceberg_write_roundtrip",
-        "iceberg_write_time_travel",
-        "lakesync_delta_roundtrip",
-        "agg_approx_distinct",
-        "agg_array_sorted",
-        "agg_bitwise_bool",
-        "agg_corr_covar",
-        "agg_cube",
-        "agg_filter_having",
-        "agg_global_stats",
-        "agg_group_distinct",
-        "agg_grouping_sets",
-        "agg_histogram_buckets",
-        "agg_hll_partial_merge",
-        "agg_median_percentile",
-        "agg_mode_pergroup",
-        "agg_percentile_approx",
-        "agg_rollup",
-        "agg_skew_kurtosis",
-        "agg_stddev_var",
-        "agg_string_concat",
-        "agg_sum_revenue",
-        "cluster_kmeans_embeddings",
-    }
-)
-
-#: Names whose DRIVER-OBSERVABLE behavior changes in round 14 after an
-#: earlier green row (same extended scope as REVERIFY_R11-R13:
-#: body/oracle, SQL-rewriting library, or executed-plan-shape change).
-#: Round 14 touches all three lake stacks:
-#: - Delta: read_delta_changes gains the cdc-file branch + the
-#:   mixed-commit derivation gate (delta_cdf_read, and
-#:   lakesync_delta_roundtrip consumes it inside sync_from_delta); the
-#:   DML engines gain CDF staging hooks and table-type casts on their
-#:   outputs (delta_dml/dv_dml/merge roundtrips).
-#: - Iceberg: read_iceberg admits format-version 3 and _live_files
-#:   collects puffin deletion vectors (every reader), and the delete
-#:   writers commit under an unpartitioned spec (every DML roundtrip);
-#:   the write roundtrips read back through the changed reader.
-#: - Hudi: _live_slices now merges the archived timeline (every COW
-#:   read and, via write_hudi's hit-group discovery, every fixture
-#:   build); MoR rows re-present alongside out of caution since their
-#:   fixtures build through the same writer.
-#: - knn: the pq/sketch CONTRACT queries now probe the same offline
-#:   index artifacts as their probe twins (bit-equal results, plan
-#:   shape changed) — both re-present.
-#: Round-14 second session (performance pass, results bit-stable but
-#: executed paths changed — same re-presentation discipline):
-#: - k-means rewritten from the long-form broadcast-join rounds to
-#:   Arrow-batch assignment with map-side partial centroid sums
-#:   (operators/clustering.py) → cluster_kmeans_embeddings and
-#:   curation_semdedup (its offline clustering build).
-#: - pagerank gains the sub-cut driver finish (the CC gate) →
-#:   graph_pagerank_trade.
-#: - planning-sized local relations now enter plans as ONE Arrow batch
-#:   (localrel.py::local_df) instead of pickled Python-RDD scans →
-#:   dedup_cluster_assign/star (union-find labels), knn_ivf_topk/
-#:   knn_ivf_probe (IVF routing), knn_pq_probe (ADC query map),
-#:   pack_sequences + stats_ks_two_sample (prefix-sum base offsets),
-#:   text_language_guess + pipeline_training_data (stopword relation),
-#:   join_salted_skew (weight dim).
-#: - agg_approx_distinct's sketch relaxes rsd 0.01 → 0.02 (contract
-#:   unchanged at ≤5%, measured error ≤0.9% at every SF).
-REVERIFY_R14 = frozenset(
-    {
-        "agg_approx_distinct",
-        # exact_percentiles moved to the range-partitioned two-phase
-        # prefix sum (operators/percentile.py) — every consumer's
-        # executed plan changed, so all four re-enter the window.
-        # This makes 52 unrotated names for the 50-name window; the
-        # two alphabetically-last (stats_psi_value_drift,
-        # text_language_guess) spill into the NEXT round's window —
-        # they stay unrotated until driver-green, so the cross-round
-        # union remains monotone with no never-verified names:
-        "agg_median_percentile",
-        "agg_percentile_approx",
-        "events_anomaly_mad",
-        "stats_psi_value_drift",
-        "cluster_kmeans_embeddings",
-        "curation_semdedup",
-        "dedup_cluster_assign",
-        "dedup_cluster_star",
-        "graph_pagerank_trade",
-        "join_salted_skew",
-        "knn_ivf_probe",
-        "knn_ivf_topk",
-        "knn_pq_probe",
-        "knn_pq_topk",
-        "knn_sketch_topk",
-        "pack_sequences",
-        "pipeline_training_data",
-        "stats_ks_two_sample",
-        "text_language_guess",
-        "delta_dv_read",  # apply_dvs builds its pairs via fp_pos_df now
-        "delta_cdf_read",
-        "delta_dml_roundtrip",
-        "delta_dv_dml_roundtrip",
-        "delta_merge_roundtrip",
-        "lakesync_delta_roundtrip",
-        "iceberg_dml_roundtrip",
-        "iceberg_eq_delete_read",
-        "iceberg_eq_dml_roundtrip",
-        "iceberg_external_read",
-        "iceberg_mor_dml_roundtrip",
-        "iceberg_mor_read",
-        "iceberg_pruned_read",
-        "iceberg_time_travel",
-        "iceberg_write_roundtrip",
-        "iceberg_write_time_travel",
-        "hudi_external_read",
-        "hudi_incremental_read",
-        "hudi_mor_dml_roundtrip",
-        "hudi_mor_read",
-        "hudi_mor_time_travel",
-        "hudi_time_travel",
-        "hudi_write_roundtrip",
-    }
-)
-
-
-def _renamed(spec: QuerySpec, new_name: str) -> QuerySpec:
-    return QuerySpec(
-        name=new_name,
-        spark=spec.spark,
-        oracle=spec.oracle,
-        tags=spec.tags,
-        doc=spec.doc,
-    )
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """Name → spec for every declared query (imports all plan modules).
-
-    Keys for queries already driver-verified in earlier rounds carry the
-    ``z_`` rotation prefix (ROTATED_GREEN_R01 ∪ R04 ∪ R05 ∪ R06) so the driver's
-    alphabetical 50-query window reaches the unchecked tail; PROMOTED_R05 /
-    PROMOTED_R06 drop the ``zz_`` deferral prefix from queries entering the
-    window (promotion applies before the green-set check, so a promoted
-    name that later turns green rotates like any other)."""
+    """Exposed name → spec for every declared query (imports all
+    plan modules); names in :data:`ROTATED` carry the ``z_`` prefix."""
     # import for side effect of registration
     from connected_data_lake_spark.plans import (  # noqa: F401
         events,
@@ -930,23 +271,5 @@ def all_specs() -> dict[str, QuerySpec]:
         rootfs_queries,
     )
 
-    out: dict[str, QuerySpec] = {}
-    for name, spec in _REGISTRY.items():
-        final = PROMOTED_R05.get(name, name)
-        final = PROMOTED_R06.get(final, final)
-        if final not in REVERIFY_R14 and (
-            final in ROTATED_GREEN_R01
-            or final in ROTATED_GREEN_R04
-            or final in ROTATED_GREEN_R05
-            or final in ROTATED_GREEN_R06
-            or final in ROTATED_GREEN_R07
-            or final in ROTATED_GREEN_R08
-            or final in ROTATED_GREEN_R09
-            or final in ROTATED_GREEN_R10
-            or final in ROTATED_GREEN_R11
-            or final in ROTATED_GREEN_R12
-            or final in ROTATED_GREEN_R13
-        ):
-            final = f"z_{final}"
-        out[final] = spec if final == name else _renamed(spec, final)
-    return out
+    exposed = (replace(s, name=f"z_{n}" if n in ROTATED else n) for n, s in _REGISTRY.items())
+    return {spec.name: spec for spec in exposed}

@@ -927,7 +927,7 @@ def knn_sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "zz_text_repeated_spans",
+    "text_repeated_spans",
     oracle=f"""
     WITH t AS (
       SELECT doc_id, string_split({_NORM.format(c='text')}, ' ') AS toks
@@ -965,7 +965,7 @@ def knn_sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("text", "pipeline"),
 )
-def zz_text_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+def text_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document repeated-span detection via content-defined chunking
     — the span-level dedup signal (Lee et al., "Deduplicating Training
     Data Makes Language Models Better") that document-level fingerprints
@@ -1129,14 +1129,14 @@ def _pq_indexed(spark: SparkSession, sf_dir: str):
 
 
 @query(
-    "zz_knn_pq_probe",
+    "knn_pq_probe",
     oracle=_KNN_PROBE_CONTRACT_ORACLE,
     tags=("similarity",),
 )
-def zz_knn_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+def knn_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PQ probe ALONE — the production ANN query surface, split from
     the recall contract the way ``knn_ivf_probe`` splits from
-    ``knn_ivf_topk``: ``zz_knn_pq_topk`` times codebook training + corpus
+    ``knn_ivf_topk``: ``knn_pq_topk`` times codebook training + corpus
     encoding + brute-force exact top-k + the contract join, so the cost a
     user pays per query — the ADC lookup-table scan over the prewritten
     smallint code table plus the pruned exact re-rank (top-100 candidate
@@ -1158,11 +1158,11 @@ def zz_knn_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "zz_knn_pq_topk",
+    "knn_pq_topk",
     oracle=_KNN_CONTRACT_ORACLE,
     tags=("similarity",),
 )
-def zz_knn_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def knn_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN vs exact, as a recall contract — the
     memory-scale path alongside the sketch (bit-prune) and IVF
     (partition-prune) families: 16 subvectors × 256 codes (16 bytes/vector
@@ -1412,7 +1412,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "zz_pipeline_training_data",
+    "pipeline_training_data",
     oracle=f"""
     WITH q AS (
       SELECT doc_id,
@@ -1477,7 +1477,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("dedup", "text", "pipeline"),
 )
-def zz_pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
+def pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed training-data pipeline, end to end in ONE job:
     quality gate → exact dedup → MinHash-LSH near-dup removal →
     per-language token budget. This is the flagship composition the
@@ -1606,7 +1606,7 @@ def _bucketed_order_tables(
 
 
 @query(
-    "zz_join_bucketed_colocated",
+    "join_bucketed_colocated",
     oracle="""
     SELECT o_orderpriority,
            COUNT(*) AS n_lines,
@@ -1617,7 +1617,7 @@ def _bucketed_order_tables(
     """,
     tags=("join", "layout"),
 )
-def zz_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
+def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-fact equi-join over tables PRE-BUCKETED on the join key
     (sources/bucketed.py): both sides hash-clustered into the same bucket
     count at write time, so SortMergeJoin aligns bucket i with bucket i
@@ -1625,12 +1625,7 @@ def zz_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the layout, not the query, pays the shuffle, once, amortized over
     every join on that key. The merge hint pins SMJ so the co-location
     (not a broadcast) is what the plan proves; asserted in
-    tests/test_plan_quality.py. Values equal the plain-join oracle.
-
-    Registered as ``join_bucketed_colocated`` since round 5
-    (plans/__init__.py::PROMOTED_R05) so it enters the driver's 50-query
-    correctness window; the ``zz_`` declaration name is kept for bench
-    history continuity."""
+    tests/test_plan_quality.py. Values equal the plain-join oracle."""
     o, li = _bucketed_order_tables(spark, sf_dir)
     j = li.hint("merge").join(
         o.hint("merge"), li["l_orderkey"] == o["o_orderkey"]
@@ -1650,16 +1645,13 @@ def zz_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # training-data curation: splits / sampling / contamination / repetition
 #
-# Round-5 additions to the LLM-pipeline family. Declared under ``zz_`` names
-# and promoted into the driver's 50-query correctness window via
-# PROMOTED_R05 (plans/__init__.py), displacing four window_* queries that
-# already hold green CORRECTNESS_r04 rows; also oracle-verified by the local
+# Round-5 additions to the LLM-pipeline family, oracle-verified by the local
 # gate (tools/oracle_check.py, tests/test_oracle_suite.py).
 # ---------------------------------------------------------------------------
 
 
 @query(
-    "zz_split_train_test",
+    "split_train_test",
     oracle=f"""
     WITH t AS (
       SELECT substring(md5({_NORM.format(c='text')}), 1, 1) AS h,
@@ -1676,7 +1668,7 @@ def zz_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("text", "pipeline"),
 )
-def zz_split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+def split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic content-hash train/val/test split (75/12.5/12.5 by the
     first hex nibble of the md5 fingerprint: 0-b / c-d / e-f) with the
     per-split token budget. Hash-splitting is how a 100 TB pipeline gets
@@ -1703,7 +1695,7 @@ def zz_split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "zz_sample_stratified",
+    "sample_stratified",
     oracle=f"""
     WITH t AS (
       SELECT doc_id, source, md5({_NORM.format(c='text')}) AS fp FROM documents
@@ -1717,7 +1709,7 @@ def zz_split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("text", "pipeline"),
 )
-def zz_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified deterministic sample: 20 docs per source stratum, chosen
     by content-hash order — the reproducible analogue of per-stratum random
     sampling (the md5 fingerprint is uniform and corpus-stable, so the
@@ -1736,7 +1728,7 @@ def zz_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "zz_text_repetition",
+    "text_repetition",
     oracle=f"""
     WITH t AS (
       SELECT doc_id, string_split({_NORM.format(c='text')}, ' ') AS toks
@@ -1761,7 +1753,7 @@ def zz_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("text", "pipeline"),
 )
-def zz_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style intra-document repetition signals: duplicate-bigram
     fraction and most-frequent-token mass — the filters that catch boiler-
     plate and keyboard-mash documents that sail through length/stopword
@@ -1797,7 +1789,7 @@ def zz_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "zz_contamination_overlap",
+    "contamination_overlap",
     oracle=f"""
     WITH t AS (
       SELECT doc_id, source, string_split({_NORM.format(c='text')}, ' ') AS toks
@@ -1829,7 +1821,7 @@ def zz_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("dedup", "text", "pipeline"),
 )
-def zz_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination scan: per source, how many corpus documents
     share ≥ 5 distinct 3-gram shingles with the held-out eval set (here:
     doc_id < 25 stands in for the benchmark). The production shape at
@@ -1877,8 +1869,7 @@ def zz_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # round-5 additions #2: dedup clustering, PII scrub, unigram LM scoring,
-# embedding quantization. Named to sort inside the driver's 50-query
-# correctness window; the displaced tail queries all hold green r4 rows.
+# embedding quantization.
 # ---------------------------------------------------------------------------
 
 
@@ -2172,7 +2163,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "zz_text_logprob_bigram",
+    "text_logprob_bigram",
     oracle=f"""
     WITH t AS (
       SELECT doc_id, string_split({_NORM.format(c='text')}, ' ') AS toks
@@ -2200,7 +2191,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("text", "pipeline"),
 )
-def zz_text_logprob_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
+def text_logprob_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-bigram conditional language-model score per document: mean
     log2 P(w2|w1) over the doc's bigrams, where P(w2|w1) =
     C(w1 w2) / C(w1·) and C(w1·) is w1's bigram-PREFIX count (so the
@@ -2694,7 +2685,7 @@ def sample_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "zz_dedup_containment",
+    "dedup_containment",
     oracle="""
     WITH t AS (
       SELECT doc_id,
@@ -2720,7 +2711,7 @@ def sample_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("dedup",),
 )
-def zz_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed 3-gram containment pairs (|src∩dst| / |src| ≥ 0.6) —
     sub-document duplication that symmetric Jaccard misses: a short doc
     quoted inside a long one scores ≈0 on Jaccard but 1.0 on containment
@@ -2733,7 +2724,7 @@ def zz_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "zz_events_retention_cohorts",
+    "events_retention_cohorts",
     oracle="""
     WITH uw AS (
       SELECT DISTINCT user_id, date_trunc('week', ts) AS wk
@@ -2750,7 +2741,7 @@ def zz_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("events", "analytics"),
 )
-def zz_events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention matrix: users bucketed by first-active week,
     distinct-user counts at each week offset — the classic product-analytics
     rollup the funnel/top-users queries don't cover. Plan: one distinct on
@@ -2773,7 +2764,7 @@ def zz_events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "zz_knn_centroid_classify",
+    "knn_centroid_classify",
     oracle="""
     WITH u AS (
       SELECT vec_id, label,
@@ -2800,7 +2791,7 @@ def zz_events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("similarity", "embeddings"),
 )
-def zz_knn_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
+def knn_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-centroid label confusion matrix: per-label mean embedding,
     every vector assigned to its closest centroid (squared L2, ties to the
     smaller label), counts of (true label, predicted label) — the label
@@ -2860,11 +2851,11 @@ def _sketch_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "zz_knn_sketch_probe",
+    "knn_sketch_probe",
     oracle=_KNN_PROBE_CONTRACT_ORACLE,
     tags=("similarity", "ann", "probe"),
 )
-def zz_knn_sketch_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+def knn_sketch_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe-only sign-sketch ANN: Hamming prune + exact re-rank against
     the prewritten parquet sketch index — what a serving query costs once
     the index exists, the same timed-surface split the IVF and PQ probes

@@ -194,7 +194,7 @@ def _chunk(df: DataFrame, max_chunk_size: int) -> DataFrame:
         "mtime",
         "mode",
         "size",
-        F.posexplode(F.sequence(F.lit(0).cast("long"), n - 1)).alias("chunk_id", "_i"),
+        F.posexplode(F.sequence(F.lit(0).cast("long"), n - 1)).alias("_i", "chunk_id"),
         "data",
     )
     head = F.col("chunk_id") == 0

@@ -185,7 +185,7 @@ def test_bigram_logprob_matches_python_reference(spark, tmp_path):
     docs_dir = tmp_path / "documents.parquet"
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(str(docs_dir))
 
-    from connected_data_lake_spark.plans.extensions import zz_text_logprob_bigram
+    from connected_data_lake_spark.plans.extensions import text_logprob_bigram as zz_text_logprob_bigram
 
     got = {
         r.doc_id: (r.n_bigrams, r.avg_logprob)

@@ -43,6 +43,24 @@ def test_chunking_one_row_per_chunk_metadata_on_head(spark, tree):
     assert sum(r["chunk_size"] for r in rows) == 10_000
 
 
+def test_chunked_load_writes_rootfs_schema(spark, tree):
+    from connected_data_lake_spark.sources.rootfs import ROOTFS_SCHEMA, write_table
+
+    cdl = Cdl(spark=spark)
+    fs = cdl.open(f"local://{tree}")
+    fs.load(max_chunk_size=4096)
+    typed = [(f.name, f.dataType) for f in fs.table().schema.fields]
+    assert typed == [(f.name, f.dataType) for f in ROOTFS_SCHEMA.fields]
+    extra = spark.createDataFrame(
+        [("extra.txt", "/", None, None, None, 420, 3, 0, 0, 3, b"abc")], ROOTFS_SCHEMA
+    )
+    write_table(extra, fs.path.table_uri, mode="append")
+    reopened = cdl.open(f"local://{tree}")
+    assert reopened.table().count() == 6  # empty + small + 3 chunks of big + extra
+    row = reopened.read_files("name = 'extra.txt'").collect()[0]
+    assert (row["chunk_id"], bytes(row["data"])) == (0, b"abc")
+
+
 def test_read_dir_drops_payload_and_non_head_chunks(spark, tree):
     fs = Cdl(spark=spark).open(f"local://{tree}")
     fs.load(max_chunk_size=4096)

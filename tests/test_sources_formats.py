@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import pathlib
+import random
 
 import pyarrow as pa
 import pyarrow.ipc
@@ -89,6 +90,22 @@ def test_take_random_access(spark, tmp_path):
     assert [r["_rowid"] for r in out] == [0, 2, 4]
     assert [r["name"] for r in out] == ["f0.txt", "f2.txt", "f4.txt"]
     assert bytes(out[1]["data"]) == b"payload-2"
+
+    # a chunked tree of 3 MB incompressible bytes: every ordinal resolves,
+    # in canonical order
+    big = tmp_path / "big"
+    big.mkdir()
+    for i in range(150):
+        pathlib.Path(big, f"b{i:03d}.bin").write_bytes(random.Random(i).randbytes(20_000))
+    fs = Cdl(spark=spark).open(f"local://{big}")
+    fs.load(max_chunk_size=16 * 1024)
+    n = fs.table().count()
+    assert n == 300
+    out = fs.take(list(range(n)), columns=("name", "chunk_id")).collect()
+    assert [r["_rowid"] for r in out] == list(range(n))
+    assert [(r["name"], r["chunk_id"]) for r in out] == [
+        (f"b{i:03d}.bin", c) for i in range(150) for c in (0, 1)
+    ]
 
 
 def test_orc_round_trip_with_pushdown(spark, tmp_path):

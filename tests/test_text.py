@@ -206,7 +206,7 @@ def test_repeated_spans_align_at_any_offset(spark, tmp_path):
         "overwrite"
     ).parquet(str(tmp_path / "documents.parquet"))
 
-    from connected_data_lake_spark.plans.extensions import zz_text_repeated_spans
+    from connected_data_lake_spark.plans.extensions import text_repeated_spans as zz_text_repeated_spans
 
     got = {r.doc_id: r for r in zz_text_repeated_spans(spark, str(tmp_path)).collect()}
     assert got[1].shared_token_fraction > 0.5
@@ -287,7 +287,7 @@ def test_repeated_spans_chunking_matches_window_reference(spark, tmp_path):
             fp_docs.setdefault(fp, set()).add(d)
     shared = {fp for fp, ds in fp_docs.items() if len(ds) >= 2}
 
-    from connected_data_lake_spark.plans.extensions import zz_text_repeated_spans
+    from connected_data_lake_spark.plans.extensions import text_repeated_spans as zz_text_repeated_spans
 
     got = {r.doc_id: r for r in zz_text_repeated_spans(spark, str(tmp_path)).collect()}
     assert 6 not in got  # empty normalized text excluded

@@ -33,14 +33,13 @@ def main() -> None:
         release_session_indexes,
         track_session_indexes,
     )
-    from connected_data_lake_spark.plans import all_specs
+    from connected_data_lake_spark.plans import spec_of
     from connected_data_lake_spark.session import get_spark
     from connected_data_lake_spark.sources.tables import persist_tables
 
     spark = get_spark("cdl-spark-bench-subset")
     spark.sparkContext.setLogLevel("ERROR")
-    specs = all_specs()
-    warm = specs.get("q1_pricing_summary") or specs["z_q1_pricing_summary"]
+    warm = spec_of("q1_pricing_summary")
     warm.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
     from pyspark.sql import functions as F
 
@@ -68,8 +67,9 @@ def main() -> None:
     persist_tables(spark, sf_dir)
 
     for name in names:
-        spec = specs.get(name) or specs.get(f"z_{name}")
-        if spec is None:
+        try:
+            spec = spec_of(name)
+        except KeyError:
             print(f"{name}: UNKNOWN")
             continue
 

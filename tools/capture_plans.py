@@ -39,7 +39,7 @@ def main() -> None:
     out_dir = os.path.join(REPO, "plans", round_dir)
     os.makedirs(out_dir, exist_ok=True)
 
-    from connected_data_lake_spark.plans import all_specs
+    from connected_data_lake_spark.plans import all_specs, spec_of
     from connected_data_lake_spark.session import get_spark
 
     spark = get_spark("cdl-spark-capture-plans")
@@ -49,8 +49,9 @@ def main() -> None:
         names = sorted(specs)
 
     for name in names:
-        spec = specs.get(name) or specs.get(f"z_{name}")
-        if spec is None:
+        try:
+            spec = spec_of(name)
+        except KeyError:
             print(f"# unknown query: {name}", file=sys.stderr)
             continue
         try:

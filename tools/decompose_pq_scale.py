@@ -85,9 +85,9 @@ def main() -> int:
     )
 
     # 4. the declared body end-to-end (train + brute + scan + contract)
-    from connected_data_lake_spark.plans import all_specs
+    from connected_data_lake_spark.plans import spec_of
 
-    spec = all_specs().get("z_knn_pq_topk") or all_specs().get("knn_pq_topk")
+    spec = spec_of("knn_pq_topk")
     t_full = timed(lambda: _materialize(spec.spark(spark, args.sf)))
 
     out = {

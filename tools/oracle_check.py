@@ -16,12 +16,13 @@ from __future__ import annotations
 import argparse
 import hashlib
 import math
+import os
 import sys
 from dataclasses import dataclass
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 

@@ -1,42 +1,44 @@
-"""Emit the next round's window-rotation frozenset from a CORRECTNESS file.
+"""Print the next ``ROTATED`` set from a CORRECTNESS file.
 
 Usage:
     python tools/rotate_window.py CORRECTNESS_r06.json
 
-Prints a ready-to-paste ``ROTATED_GREEN_R0N`` frozenset literal containing
-every query that passed all three gates (rows + schema + hash) under its
-FINAL (driver-visible) name, plus a summary of non-passing entries. See
-the rotation recipe comment in ``connected_data_lake_spark/plans/__init__.py``:
-promotion applies before the green-set check, so these names drop straight
-into the membership test.
+Prints a ready-to-paste ``ROTATED`` frozenset literal for
+``connected_data_lake_spark/plans/__init__.py``: the current set plus the
+stable name of every query in the file that passed all three gates
+(rows + schema + hash), and a summary of the entries that did not.
 """
 
 from __future__ import annotations
 
 import json
-import re
+import os
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
 
 
 def main(path: str) -> int:
+    from connected_data_lake_spark.plans import ROTATED
+
     with open(path) as fh:
         rec = json.load(fh)
-    m = re.search(r"_r(\d+)", path)
-    round_no = int(m.group(1)) if m else 0
-    green = sorted(
+    passed = {
         name
         for name, r in rec.items()
         if r.get("rows_match") and r.get("schema_match") and r.get("hash_match")
-    )
-    bad = {name: r.get("err") or "mismatch" for name, r in rec.items() if name not in green}
-    print(f"# {len(green)} green of {len(rec)} checked in {path}")
+    }
+    green = {name.removeprefix("z_") for name in passed}
+    bad = {name: r.get("err") or "mismatch" for name, r in rec.items() if name not in passed}
+    print(f"# {len(green)} green of {len(rec)} checked in {path}; {len(green - ROTATED)} newly rotated")
     if bad:
         print(f"# NOT green (fix before rotating): {bad}")
-    print(f"ROTATED_GREEN_R{round_no:02d} = frozenset(")
+    print("ROTATED = frozenset(")
     print("    {")
-    for name in green:
-        # strip a rotation prefix if the driver saw an already-rotated name
-        print(f'        "{name[2:] if name.startswith("z_") else name}",')
+    for name in sorted(ROTATED | green):
+        print(f'        "{name}",')
     print("    }")
     print(")")
     return 0

@@ -1,10 +1,10 @@
 """Audit the driver correctness window against past CORRECTNESS records.
 
 The per-round driver gate verifies only the FIRST 50 declared query names
-alphabetically; rotation bookkeeping (plans/__init__.py) must keep every
+alphabetically; the ``ROTATED`` set (plans/__init__.py) must keep every
 never-verified name inside that window and park already-verified names
-behind ``z_``/``zz_`` prefixes. This prints the current arrangement and
-flags violations:
+behind the ``z_`` prefix. This prints the current arrangement and flags
+violations:
 
     python tools/window_check.py
 
@@ -26,12 +26,6 @@ if REPO not in sys.path:
 WINDOW = 50
 
 
-def base_name(name: str) -> str:
-    """Strip the single-``z_`` rotation prefix (``zz_`` is a deferral
-    prefix for NEW queries, not a rotation of a verified one)."""
-    return name[2:] if name.startswith("z_") and not name.startswith("zz_") else name
-
-
 def main() -> int:
     from connected_data_lake_spark.plans import all_specs
 
@@ -42,23 +36,18 @@ def main() -> int:
     for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         for name, row in json.load(open(path)).items():
             if row.get("rows_match") and row.get("hash_match") is not False:
-                green.add(base_name(name))
+                green.add(name.removeprefix("z_"))
 
-    unverified_in = [n for n in window if base_name(n) not in green]
-    unverified_out = [n for n in names[WINDOW:] if base_name(n) not in green]
+    unverified_in = [n for n in window if n.removeprefix("z_") not in green]
+    unverified_out = [n for n in names[WINDOW:] if n.removeprefix("z_") not in green]
 
     print(f"{len(names)} declared queries; window = first {WINDOW} alphabetically")
     print(f"window tail: {window[-1]!r}; first outside: {names[WINDOW] if len(names) > WINDOW else None!r}")
     print(f"in-window, awaiting driver verification ({len(unverified_in)}): {unverified_in}")
     print(f"OUTSIDE window, never verified ({len(unverified_out)}): {unverified_out}")
     if unverified_out:
-        deferred = [n for n in unverified_out if n.startswith("zz_")]
-        stranded = [n for n in unverified_out if not n.startswith("zz_")]
-        if deferred:
-            print(f"  zz_-deferred (rotate in NEXT round): {deferred}")
-        if stranded:
-            print(f"  STRANDED — fix the rotation sets: {stranded}")
-            return 1
+        print(f"  STRANDED — fix the ROTATED set: {unverified_out}")
+        return 1
     return 0
 
 
