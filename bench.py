@@ -8,19 +8,25 @@ Protocol (BASELINE.md §2): wall-clock sec/query on local[$SPARK_GRAFT_CPUS],
 AQE on, **median of 3 timed runs after 1 untimed warm-up per query** — the
 single-shot numbers of rounds 1-4 swung ±50-300% on identical code (VERDICT
 r4), so per-query deltas were unreadable. Each run fully materializes the
-plan via a noop sink (rows never collect to the driver); every PER-QUERY
-cache is released between runs so every run times the same work, while the
+plan JVM-side (rows never collect to the driver); every PER-QUERY cache is
+released between runs so every run times the same work, while the
 immutable table registry stays pinned (round 9: both engines amortize
 input decode across the suite — DuckDB holds the same files in its buffer
-pool / OS page cache).
+pool / OS page cache). A paired DuckDB control then runs the oracle SQL
+as ONE uncontended pass after the whole Spark phase (interleaving it per
+query inflated both phases, round 14).
 
-The full result (per-run samples + medians) is also written to
-``BENCH_SELF.json`` next to this file: the driver's stdout capture has
-truncated the tail of the one-line record twice (ADVICE r4), and a
-structured on-disk artifact keeps totals recoverable.
+The full result (per-run samples, medians, the per-query build/exec split)
+is also written to ``BENCH_SELF.json`` next to this file: the driver's
+stdout capture has truncated the tail of the one-line record twice (ADVICE
+r4), and a structured on-disk artifact keeps totals recoverable.
 
 Set SPARK_GRAFT_BENCH_RUNS to override the timed-run count (e.g. 1 for a
-quick smoke while iterating).
+quick smoke while iterating) and SPARK_GRAFT_BENCH_DUCK=0 to skip the
+control pass.
+
+:func:`setup` and :func:`run_once` are the one suite-timing harness:
+``tools/bench_subset.py`` and ``tools/capture_plans.py`` use them too.
 """
 
 from __future__ import annotations
@@ -28,223 +34,167 @@ from __future__ import annotations
 import json
 import os
 import statistics
+import subprocess
 import sys
 import time
+from datetime import datetime, timezone
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    gc_between = os.environ.get("SPARK_GRAFT_BENCH_GC", "0") == "1"
-    try:
-        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
-    except ValueError:
-        sf = -1.0
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
-    from connected_data_lake_spark.plans import all_specs, spec_of
-    from connected_data_lake_spark.session import get_spark
 
-    spark = get_spark("cdl-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    # bench-profile lever (VERDICT r9 #7): optionally re-seed
-    # spark.sql.shuffle.partitions for the whole draw. Runtime-settable, so
-    # the A/B needs no session rebuild; recorded in every artifact below so
-    # draws are comparable. Unset = the session default (core count).
-    shuffle_override = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if shuffle_override:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_override)
-    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    specs = all_specs()
+def setup(spark, sf_dir: str) -> set[int]:
+    """Session set-up, all outside the timed window; returns the RDD ids
+    of the pinned table registry.
 
-    # warm-up: JVM, codegen, parquet footer caches
-    warm = spec_of("q1_pricing_summary")
-    warm.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # warm Python/Arrow workers: the FIRST pandas_udf stage in a session
-    # pays worker spawn + numpy import (~3s); that's session start-up cost,
-    # not query cost, so absorb it like the JVM warm-up above
+    1. JVM warm-up (codegen, parquet footer caches) via q1_pricing_summary.
+    2. Python/Arrow worker warm-up, one task per core: the FIRST
+       pandas_udf stage in a session pays worker spawn + numpy import
+       (~3 s) — session start-up cost, not query cost.
+    3. The offline index/layout builds (IVF coarse quantizer, bucketed
+       order tables, ...): index jobs at cluster scale (VERDICT r01 #4),
+       so the declared queries time the probe/join, as production would.
+       Session tracking is still OFF here, so the per-run release sweep
+       never unpersists them (otherwise every run re-pays the build).
+    4. Session index tracking on (opt-in, ADVICE r9: only a runner with a
+       release cadence like this one should hold session-wide strong
+       references).
+    5. The pinned table registry (VERDICT r8 "Next round" #1): the
+       relational+events tables materialize into the columnar cache ONCE,
+       so per-query timings measure execution rather than re-decodes of
+       the same single-row-group parquet files.
+    """
     from pyspark.sql import functions as F
+
+    from connected_data_lake_spark.plans import extensions, spec_of
+    from connected_data_lake_spark.session import default_parallelism
+    from connected_data_lake_spark.sources.tables import (
+        persist_tables,
+        track_session_indexes,
+    )
+
+    _noop(spec_of("q1_pricing_summary").spark(spark, sf_dir))
 
     @F.pandas_udf("long")
     def _warm(s):
         return s
 
-    spark.range(0, 1024).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).select(
-        _warm("id")
-    ).write.format("noop").mode("overwrite").save()
-    # offline index builds: the IVF coarse quantizer and the bucketed
-    # order-table layout are index/layout jobs at cluster scale (VERDICT
-    # r01 #4) — built outside the timed window so the declared queries
-    # time the probe/join, as production would
-    from connected_data_lake_spark.plans import extensions as _ext
+    _noop(spark.range(0, 1024).repartition(default_parallelism()).select(_warm("id")))
+    for build in (
+        extensions._ivf_indexed,
+        extensions._bucketed_order_tables,
+        extensions._dedup_corpus_index,
+        extensions._pq_indexed,
+        extensions._sketch_indexed,
+        extensions._gt_topk,
+        extensions._semdedup_clustered,
+    ):
+        build(spark, sf_dir)
+    track_session_indexes(True)
+    return persist_tables(spark, sf_dir)
 
-    _ext._ivf_indexed(spark, sf_dir)
-    _ext._bucketed_order_tables(spark, sf_dir)
-    _ext._dedup_corpus_index(spark, sf_dir)
-    _ext._pq_indexed(spark, sf_dir)
-    _ext._sketch_indexed(spark, sf_dir)
-    _ext._gt_topk(spark, sf_dir)
-    _ext._semdedup_clustered(spark, sf_dir)
-    # pinned table registry (VERDICT r8 "Next round" #1): materialize the
-    # relational+events tables into the columnar cache ONCE, outside the
-    # timed window, so per-query timings measure execution rather than 192
-    # re-decodes of the same single-row-group parquet files. The paired
-    # DuckDB control reads the same files out of its buffer pool / OS page
-    # cache, so both engines amortize input decode across the suite.
-    # Between runs, per-query persists are released via their attached
-    # handles (entry + storage — a storage-only sweep left stale
-    # CacheManager entries whose unmaterialized relations were substituted
-    # into later plans and re-ran lineage per consumer; measured 4.4 ->
-    # 22 s on pipeline_training_data). Queries that leave anything cached
-    # beyond the registry fall back to a full clearCache + registry re-pin
-    # and are reported in BENCH_SELF.json ("cache_leaks").
-    from connected_data_lake_spark.operators.dedup import (
-        release_index,
-        release_session_indexes,
-        track_session_indexes,
-    )
+
+def _repin(spark, sf_dir: str) -> set[int]:
+    """Drop every cache and re-pin the table registry (the fallback after
+    a run left something cached that its release hooks did not free)."""
     from connected_data_lake_spark.sources.tables import (
         persist_tables,
+        release_session_indexes,
+    )
+
+    release_session_indexes()
+    spark.catalog.clearCache()
+    return persist_tables(spark, sf_dir)
+
+
+def run_once(spark, spec, sf_dir: str, registry_ids: set[int]) -> tuple[float, float, set[int]]:
+    """Time one run of ``spec``: returns ``(build_s, exec_s, registry_ids)``.
+
+    ``build_s`` covers ``spec.spark(...)`` through ``executedPlan()``
+    (Python construction, analysis, planning); ``exec_s`` executes that
+    final (AQE) physical plan and counts rows JVM-side — every operator
+    runs over every row, only per-partition counts reach the driver. A
+    noop DSv2 sink added ~60-70 ms/query of write-commit coordination that
+    is sink overhead, not query work (A/B in BENCH.md round 9).
+
+    After the timed window, the run's per-query persists are released
+    (dedup/ANN queries cache signature/shingle relations; letting runs
+    stack cached blocks caused GC churn that randomly doubled later
+    queries' times). ``release_session_indexes`` unpersists every
+    operator-persisted relation (CacheManager entry + storage) even when
+    the caller wrapped the result and dropped its attachment. A run that
+    still leaves anything cached beyond the registry falls back to
+    :func:`_repin`; the returned ids then differ from ``registry_ids``.
+    """
+    from connected_data_lake_spark.sources.tables import (
+        release_index,
+        release_session_indexes,
         stray_cache_ids,
     )
 
-    # the registry is opt-in (ADVICE r9): only a runner with a release
-    # cadence like this one should hold session-wide strong references
-    track_session_indexes(True)
-    release_session_indexes()  # drop anything the index builds persisted
-    registry_ids = persist_tables(spark, sf_dir)
-    cache_leaks: set[str] = set()
+    start = time.perf_counter()
+    df = spec.spark(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan()
+    built = time.perf_counter()
+    plan.execute().count()
+    done = time.perf_counter()
+    release_index(df)
+    release_session_indexes()
+    if stray_cache_ids(spark, registry_ids):
+        registry_ids = _repin(spark, sf_dir)
+    return built - start, done - built, registry_ids
 
-    # paired DuckDB control. Placement knob (SPARK_GRAFT_BENCH_CONTROL):
-    #
-    # - "trailing" (default): the control runs as ONE uncontended pass
-    #   after the whole Spark phase. Risk: a weather change between the
-    #   phases lands on one side only (r14 observed 1.55-2.58 across
-    #   five draws of one tree) — mitigated by drawing repeatedly and
-    #   stratifying on the control total (BENCH.md selection rule).
-    # - "interleaved": each query's control runs right after its Spark
-    #   runs (contemporaneous per-query ratios). Adopted mid-r14 for
-    #   the burst asymmetry, then REVERTED on direct measurement: the
-    #   32-thread engines contaminate each other two-sidedly — same
-    #   tree, same host session measured spark-only 127.3/117.4 s
-    #   (8g/24g) and duck-only 59.0 s, while interleaved draws ran
-    #   spark 135-163 s against control 66-86 s. Interleaving inflates
-    #   BOTH phases (thermal/cache/allocator churn at every switch) by
-    #   more than the weather drift it was hedging, and the inflation
-    #   is not ratio-neutral. Both placements do identical work.
-    duck_timings: dict[str, float] = {}
-    duck_con = None
-    control_placement = os.environ.get("SPARK_GRAFT_BENCH_CONTROL", "trailing")
-    if control_placement not in ("trailing", "interleaved"):
-        raise ValueError(f"unknown control placement {control_placement!r}")
-    if os.environ.get("SPARK_GRAFT_BENCH_DUCK", "1") != "0":
-        from tools.oracle_check import duck_connection
 
-        duck_con = duck_connection(sf_dir)
+def _family(name: str) -> str:
+    stem = name[2:] if name.startswith("z_") else name
+    return stem.split("_", 1)[0]
 
-    def _duck_once(con, name, oracle, out) -> None:
-        try:
-            start = time.perf_counter()
-            con.execute(oracle).fetchall()
-            out[name] = round(time.perf_counter() - start, 4)
-        except Exception as exc:  # noqa: BLE001
-            out[name] = -1.0
-            print(f"# duck control error {name}: {exc}", file=sys.stderr)
 
-    timings: dict[str, float] = {}
-    samples: dict[str, list[float]] = {}
-    errors: dict[str, str] = {}
-    for name in sorted(specs):
-        spec = specs[name]
+def bench_records(
+    timings: dict[str, float],
+    samples: dict[str, list[tuple[float, float]]],
+    errors: dict[str, str],
+    duck_timings: dict[str, float] | None,
+    cache_leaks: set[str],
+    sf: float,
+    n_runs: int,
+    shuffle_partitions: str,
+    meta: dict,
+) -> dict[str, dict]:
+    """Assemble one draw's artifacts from its measurements (no I/O).
 
-        def _run_once() -> float:
-            nonlocal registry_ids
-            start = time.perf_counter()
-            df = spec.spark(spark, sf_dir)
-            # full-plan materialization WITHOUT a sink: execute the final
-            # (AQE) physical plan and count rows JVM-side — every operator
-            # runs over every row, only per-partition counts reach the
-            # driver. The earlier noop DSv2 sink added ~60-70 ms/query of
-            # write-commit coordination that is sink overhead, not query
-            # work (A/B in BENCH.md round 9); the control's fetchall()
-            # materializes MORE (full results into its driver).
-            df._jdf.queryExecution().executedPlan().execute().count()
-            elapsed = time.perf_counter() - start
-            # release per-query index persists OUTSIDE the timed window:
-            # dedup/ANN queries cache signature/shingle relations scoped to
-            # one job; letting runs stack cached blocks caused GC churn that
-            # randomly doubled later queries' times (measured ±50% swings).
-            # release_session_indexes unpersists every operator-persisted
-            # relation properly (CacheManager entry + storage) even when
-            # the caller wrapped the result and dropped its attachment;
-            # the leak check below catches any persist that bypassed the
-            # registration convention entirely.
-            release_index(df)
-            release_session_indexes()
-            if stray_cache_ids(spark, registry_ids):
-                cache_leaks.add(name)
-                spark.catalog.clearCache()
-                registry_ids = persist_tables(spark, sf_dir)
-            return elapsed
-
-        try:
-            _run_once()  # per-query warm-up, untimed
-            runs = [round(_run_once(), 4) for _ in range(n_runs)]
-            samples[name] = runs
-            timings[name] = round(statistics.median(runs), 4)
-        except Exception as exc:  # noqa: BLE001
-            timings[name] = -1.0
-            errors[name] = str(exc).split("\n", 1)[0][:500]
-            print(f"# bench error {name}: {exc}", file=sys.stderr)
-            release_session_indexes()
-            spark.catalog.clearCache()
-            registry_ids = persist_tables(spark, sf_dir)
-        if (
-            duck_con is not None
-            and spec.oracle
-            and control_placement == "interleaved"
-        ):
-            _duck_once(duck_con, name, spec.oracle, duck_timings)
-        if gc_between:
-            # UNTIMED between-query hygiene (off by default, stamped into
-            # the record when on): queries late in the alphabet measured
-            # 1.5-1.8x their standalone time in-suite while early draws'
-            # values matched standalone — consistent with accumulated JVM
-            # old-gen pressure from 231 queries sharing one driver JVM.
-            # A forced full GC between queries charges collection cost to
-            # the gap instead of a random later query's timed window.
-            import gc as _gc
-
-            _gc.collect()
-            spark.sparkContext._jvm.System.gc()
-
-    if duck_con is not None and control_placement == "trailing":
-        # one uncontended control pass over the whole oracle suite,
-        # immediately after the Spark phase (see placement note above)
-        for name in sorted(specs):
-            if specs[name].oracle:
-                _duck_once(duck_con, name, specs[name].oracle, duck_timings)
-
-    def _family(name: str) -> str:
-        stem = name[2:] if name.startswith("z_") else name
-        return stem.split("_", 1)[0]
-
+    ``timings`` holds each query's median seconds (-1.0 on error),
+    ``samples`` each query's timed ``(build_s, exec_s)`` runs and
+    ``duck_timings`` the control pass (None when it was skipped);
+    ``meta`` is the draw's provenance (commit, utc, cpus, heap). Returns
+    ``{"stdout", "self", "draw", "summary"}``: the one-line record, then
+    the contents of BENCH_SELF.json, the BENCH_DRAWS.jsonl line and
+    BENCH_SELF_summary.json."""
+    duck = duck_timings or {}
     total = round(sum(t for t in timings.values() if t >= 0), 4)
-    duck_total = round(sum(t for t in duck_timings.values() if t >= 0), 4)
+    duck_total = round(sum(t for t in duck.values() if t >= 0), 4)
+    ratio = round(total / duck_total, 3) if duck_total else None
+    protocol = f"median_of_{n_runs}_after_1_warmup" + (
+        "+control_trailing" if duck_timings is not None else ""
+    )
     per_family: dict[str, dict] = {}
     for name, t in timings.items():
-        fam = per_family.setdefault(
-            _family(name), {"n": 0, "spark_sec": 0.0, "duck_sec": 0.0}
-        )
+        fam = per_family.setdefault(_family(name), {"n": 0, "spark_sec": 0.0, "duck_sec": 0.0})
         fam["n"] += 1
         if t >= 0:
             fam["spark_sec"] = round(fam["spark_sec"] + t, 4)
-        d = duck_timings.get(name, 0.0)
+        d = duck.get(name, 0.0)
         if d >= 0:
             fam["duck_sec"] = round(fam["duck_sec"] + d, 4)
+
+    def _median(runs, part):
+        return round(statistics.median(r[part] for r in runs), 4)
+
     record = {
         "metric": "declared_suite_total",
         "value": total,
@@ -252,72 +202,148 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "n_queries": len(timings),
-        "protocol": f"median_of_{n_runs}_after_1_warmup"
-        + ("+gc_between_queries" if gc_between else "")
-        + (
-            f"+control_{control_placement}"
-            if duck_con is not None
-            else ""
-        ),
+        "protocol": protocol,
         "duck_control_total": duck_total or None,
         "shuffle_partitions": shuffle_partitions,
     }
-    with open(os.path.join(REPO, "BENCH_SELF.json"), "w") as fh:
-        json.dump(
-            {
-                **record,
-                "samples": samples,
-                "errors": errors,
-                "duck_control": duck_timings,
-                "cache_leaks": sorted(cache_leaks),
-            },
-            fh,
-            indent=1,
-        )
+    full = {
+        **record,
+        "samples": {n: [round(b + e, 4) for b, e in runs] for n, runs in samples.items()},
+        "build_s": {n: _median(runs, 0) for n, runs in samples.items()},
+        "exec_s": {n: _median(runs, 1) for n, runs in samples.items()},
+        "errors": errors,
+        "duck_control": duck,
+        "cache_leaks": sorted(cache_leaks),
+    }
     # append-only machine-readable draw ledger (ADVICE r9 #5): EVERY draw
-    # lands here with its totals, ratio, and per-query medians, so the
-    # committed BENCH_SELF.json is auditable against the full set of draws
-    # it was selected from rather than against prose. The draw-selection
-    # rule for the committed artifact is recorded alongside in BENCH.md
-    # and embedded by tools/select_bench_draw.py.
+    # lands there with its totals, ratio, provenance and per-query
+    # medians, so the committed BENCH_SELF.json is auditable against the
+    # full set of draws it was selected from (tools/select_bench_draw.py)
     draw = {
         "spark_total_sec": total,
         "duck_control_total_sec": duck_total or None,
-        "ratio": round(total / duck_total, 3) if duck_total else None,
+        "ratio": ratio,
         "n_queries": len(timings),
         "n_errors": len(errors),
         "cache_leaks": sorted(cache_leaks),
         "shuffle_partitions": shuffle_partitions,
-        "protocol": record["protocol"],
+        "protocol": protocol,
         "sf": sf,
+        **meta,
         "queries": timings,
     }
-    with open(os.path.join(REPO, "BENCH_DRAWS.jsonl"), "a") as fh:
-        fh.write(json.dumps(draw) + "\n")
-    # compact, truncation-proof headline artifact (VERDICT r5 item 4): the
-    # driver's stdout capture has clipped the one-line record's tail twice;
-    # this keeps suite totals + the paired control reconstructable from
-    # committed files alone
+    # compact, truncation-proof headline (VERDICT r5 item 4)
     summary = {
         "suite_total_sec": total,
         "n_queries": len(timings),
         "n_errors": len(errors),
         "sf": sf,
-        "protocol": record["protocol"],
+        "protocol": protocol,
         "duck_control_total_sec": duck_total or None,
-        "spark_over_duck": round(total / duck_total, 3) if duck_total else None,
+        "spark_over_duck": ratio,
         "shuffle_partitions": shuffle_partitions,
         "per_family": per_family,
         "slowest_5": dict(
-            sorted(
-                ((n, t) for n, t in timings.items() if t >= 0),
-                key=lambda kv: -kv[1],
-            )[:5]
+            sorted(((n, t) for n, t in timings.items() if t >= 0), key=lambda kv: -kv[1])[:5]
         ),
     }
+    return {"stdout": record, "self": full, "draw": draw, "summary": summary}
+
+
+def _draw_meta(spark) -> dict:
+    """Provenance stamped into every ledger line."""
+    from connected_data_lake_spark.session import default_parallelism
+
+    try:
+        commit = subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=REPO, capture_output=True, text=True, check=True
+        ).stdout.strip() or None
+    except (OSError, subprocess.CalledProcessError):
+        commit = None
+    return {
+        "commit": commit,
+        "utc": datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ"),
+        "cpus": default_parallelism(),
+        "heap": spark.sparkContext.getConf().get("spark.driver.memory", None),
+    }
+
+
+def _duck_once(con, name: str, oracle: str, out: dict[str, float]) -> None:
+    try:
+        start = time.perf_counter()
+        con.execute(oracle).fetchall()
+        out[name] = round(time.perf_counter() - start, 4)
+    except Exception as exc:  # noqa: BLE001
+        out[name] = -1.0
+        print(f"# duck control error {name}: {exc}", file=sys.stderr)
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
+    try:
+        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
+    except ValueError:
+        sf = -1.0
+
+    from connected_data_lake_spark.plans import all_specs
+    from connected_data_lake_spark.session import get_spark
+
+    spark = get_spark("cdl-spark-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    specs = all_specs()
+    registry_ids = setup(spark, sf_dir)
+
+    timings: dict[str, float] = {}
+    samples: dict[str, list[tuple[float, float]]] = {}
+    errors: dict[str, str] = {}
+    cache_leaks: set[str] = set()
+    for name in sorted(specs):
+        try:
+            runs = []
+            for _ in range(n_runs + 1):  # the first run is the untimed warm-up
+                build_s, exec_s, ids = run_once(spark, specs[name], sf_dir, registry_ids)
+                if ids != registry_ids:
+                    cache_leaks.add(name)
+                    registry_ids = ids
+                runs.append((build_s, exec_s))
+            samples[name] = runs[1:]
+            timings[name] = round(statistics.median(b + e for b, e in runs[1:]), 4)
+        except Exception as exc:  # noqa: BLE001
+            timings[name] = -1.0
+            errors[name] = str(exc).split("\n", 1)[0][:500]
+            print(f"# bench error {name}: {exc}", file=sys.stderr)
+            registry_ids = _repin(spark, sf_dir)
+
+    duck_timings = None
+    if os.environ.get("SPARK_GRAFT_BENCH_DUCK", "1") != "0":
+        from tools.oracle_check import duck_connection
+
+        con = duck_connection(sf_dir)
+        duck_timings = {}
+        for name in sorted(specs):
+            if specs[name].oracle:
+                _duck_once(con, name, specs[name].oracle, duck_timings)
+
+    out = bench_records(
+        timings,
+        samples,
+        errors,
+        duck_timings,
+        cache_leaks,
+        sf,
+        n_runs,
+        shuffle_partitions,
+        _draw_meta(spark),
+    )
+    with open(os.path.join(REPO, "BENCH_SELF.json"), "w") as fh:
+        json.dump(out["self"], fh, indent=1)
+    with open(os.path.join(REPO, "BENCH_DRAWS.jsonl"), "a") as fh:
+        fh.write(json.dumps(out["draw"]) + "\n")
     with open(os.path.join(REPO, "BENCH_SELF_summary.json"), "w") as fh:
-        json.dump(summary, fh, indent=1)
-    print(json.dumps(record))
+        json.dump(out["summary"], fh, indent=1)
+    print(json.dumps(out["stdout"]))
 
 
 if __name__ == "__main__":

@@ -27,81 +27,13 @@ from pyspark.sql.window import Window
 
 from connected_data_lake_spark.functions import text as TX
 from connected_data_lake_spark.functions import vectors as VX
-
-
-#: OPT-IN registry of every index relation persisted (or
-#: localCheckpoint'ed) by an operator in this process, until released.
-#: The per-result ``_cdl_persisted`` attribute is lost as soon as a caller
-#: wraps the result (``.orderBy(...)`` returns a fresh DataFrame), so a
-#: suite runner that must release per-query caches between timed runs
-#: (bench.py) enables :func:`track_session_indexes` and drains THIS
-#: registry instead — a proper ``DataFrame.unpersist`` per entry, which
-#: drops the CacheManager entry AND storage (a storage-only sweep left
-#: stale entries whose unmaterialized relations re-ran lineage per
-#: consumer; measured 4.4 -> 22 s). Tracking is OFF by default (ADVICE
-#: r9): a long-lived library consumer that never calls
-#: ``release_session_indexes`` must not accumulate strong DataFrame
-#: references here — plain use keeps the attach-to-result-only behavior.
-_LIVE_INDEX_RELATIONS: list[DataFrame] = []
-_TRACK_SESSION_INDEXES = False
-
-
-def track_session_indexes(enabled: bool = True) -> None:
-    """Turn the session-wide index registry on/off (default off).
-
-    Suite runners with a between-runs release cadence (bench.py) enable
-    it so :func:`release_session_indexes` can free every operator-built
-    cache regardless of caller-side wrapping; plain library sessions
-    leave it off and release via :func:`release_index` on results they
-    still hold (or let Spark's LRU evict)."""
-    global _TRACK_SESSION_INDEXES
-    _TRACK_SESSION_INDEXES = enabled
-    if not enabled:
-        _LIVE_INDEX_RELATIONS.clear()
-
-
-def _with_persisted(out: DataFrame, *persisted: DataFrame) -> DataFrame:
-    """Attach the persisted index relations backing ``out`` so callers can
-    release them: ``release_index(df)`` unpersists after materialization.
-    Long-lived sessions that re-run an index build without releasing the
-    previous one would otherwise accumulate cached blocks until eviction.
-    When session tracking is enabled, each relation is also recorded in
-    :data:`_LIVE_INDEX_RELATIONS` (see :func:`release_session_indexes`)."""
-    out._cdl_persisted = list(persisted)  # type: ignore[attr-defined]
-    if _TRACK_SESSION_INDEXES:
-        _LIVE_INDEX_RELATIONS.extend(persisted)
-    return out
-
-
-def register_persist(df: DataFrame) -> DataFrame:
-    """Record a persisted/checkpointed relation for session-wide release
-    (operators that RETURN a block-backed relation — connected-components
-    labels, pagerank ranks — register it here so bench can free it).
-    No-op unless :func:`track_session_indexes` enabled the registry."""
-    if _TRACK_SESSION_INDEXES:
-        _LIVE_INDEX_RELATIONS.append(df)
-    return df
-
-
-def release_index(df: DataFrame) -> None:
-    """Unpersist the cached index relations attached by the dedup/ANN
-    operators (no-op for DataFrames without one)."""
-    for p in getattr(df, "_cdl_persisted", ()):  # pragma: no branch
-        p.unpersist()
-        try:
-            _LIVE_INDEX_RELATIONS.remove(p)
-        except ValueError:
-            pass
-
-
-def release_session_indexes() -> None:
-    """Unpersist EVERY index relation recorded since the last release.
-
-    The between-runs hook for suite runners: unlike ``release_index`` it
-    does not depend on the result DataFrame still carrying its attachment
-    through caller-side wrapping."""
-    while _LIVE_INDEX_RELATIONS:
-        _LIVE_INDEX_RELATIONS.pop().unpersist()
+from connected_data_lake_spark.sources.tables import with_persisted
+# re-exported for perfbench/worker.py until the benchmark next changes
+from connected_data_lake_spark.sources.tables import (  # noqa: F401
+    release_index,
+    release_session_indexes,
+    track_session_indexes,
+)
 
 
 def spread(df: DataFrame, *key_cols: str, width: int | None = None) -> DataFrame:
@@ -401,7 +333,7 @@ def minhash_lsh_candidates(
                 F.round(est / F.lit(float(num_hashes)), 6).alias("est_jaccard"),
             )
         )
-    return _with_persisted(pairs, sig, shingles)
+    return with_persisted(pairs, sig, shingles)
 
 
 def minhash_bands(
@@ -471,7 +403,7 @@ def minhash_lsh_probe(
         .select(F.col("n.id").alias("new_id"), F.col("c.id").alias("corpus_id"))
         .dropDuplicates(["new_id", "corpus_id"])
     )
-    return _with_persisted(out, *persisted)
+    return with_persisted(out, *persisted)
 
 
 def incremental_classify(
@@ -548,7 +480,7 @@ def incremental_classify(
             .alias("jaccard"),
         )
     )
-    return _with_persisted(out, *getattr(cand, "_cdl_persisted", ()), sh_n)
+    return with_persisted(out, *getattr(cand, "_cdl_persisted", ()), sh_n)
 
 
 def jaccard_verify(
@@ -580,7 +512,7 @@ def jaccard_verify(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    return _with_persisted(
+    return with_persisted(
         out.select("id_a", "id_b", "jaccard"),
         *getattr(candidates, "_cdl_persisted", ()),
         shingles,
@@ -595,7 +527,6 @@ def ngram_jaccard_pairs(
     block_cols: tuple[str, ...] = (),
     threshold: float = 0.5,
     max_df: int | None = None,
-    copartition_pairs: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via an inverted shingle index.
 
@@ -612,22 +543,21 @@ def ngram_jaccard_pairs(
     a prefix filter (index only each doc's (1-t)·|sh|+1 rarest shingles);
     df-skew here is mild (max df 14 at sf0.1) so the plain index wins.
 
-    ``copartition_pairs`` (default True) re-establishes a PLANNER-VISIBLE
-    hash(id) partitioning on the probe side of the self-join: all join
-    rows of a pair (a, b) then live in a's partition, so the (id_a, id_b)
-    count aggregate needs NO exchange (hash(a.id) satisfies the group's
-    clustered distribution) — the Σ_shingle df² pair relation never
-    crosses the network. The persisted postings relation IS already
-    hash(id)-partitioned (``spread``), but its cached plan is an
-    AdaptiveSparkPlan whose partitioning Catalyst cannot see, so without
-    the explicit narrow re-shuffle (postings-sized — keys + metadata
-    only, the §8 lightweight-proxy trade) ENSURE_REQUIREMENTS inserts a
-    full pair exchange (measured at sf0.1: 2.53M directed join rows,
-    1.13M distinct pairs, vs a 260k-row postings shuffle). The win
-    requires the build side to hash-join (broadcast/shuffled-hash
-    preserve the probe's partitioning); under a sort-merge plan the
-    pair exchange returns and the id shuffle is one extra narrow pass —
-    callers in that regime pass ``copartition_pairs=False``.
+    The probe side of the self-join is re-shuffled to a PLANNER-VISIBLE
+    hash(id) partitioning: all join rows of a pair (a, b) then live in a's
+    partition, so the (id_a, id_b) count aggregate needs NO exchange
+    (hash(a.id) satisfies the group's clustered distribution) — the
+    Σ_shingle df² pair relation never crosses the network. The persisted
+    postings relation IS already hash(id)-partitioned (``spread``), but
+    its cached plan is an AdaptiveSparkPlan whose partitioning Catalyst
+    cannot see, so without the explicit narrow re-shuffle (postings-sized
+    — keys + metadata only, the §8 lightweight-proxy trade)
+    ENSURE_REQUIREMENTS inserts a full pair exchange (measured at sf0.1:
+    2.53M directed join rows, 1.13M distinct pairs, vs a 260k-row postings
+    shuffle). The win requires the build side to hash-join
+    (broadcast/shuffled-hash preserve the probe's partitioning); under a
+    sort-merge plan the pair exchange returns and the id shuffle is one
+    extra narrow pass.
 
     ``max_df`` is the concrete scale lever: postings whose shingle appears
     in more than ``max_df`` docs are dropped from the index (the classic
@@ -674,7 +604,7 @@ def ngram_jaccard_pairs(
         # stop-shingle set is tiny by construction (the df distribution's
         # extreme tail) — broadcast anti-join, no extra shuffle of postings
         postings = base.join(F.broadcast(hot), ["tok", *block_cols], "left_anti")
-    probe = postings.repartition(F.col("id")) if copartition_pairs else postings
+    probe = postings.repartition(F.col("id"))
     a, b = probe.alias("a"), postings.alias("b")
     cond = (F.col("a.tok") == F.col("b.tok")) & (F.col("a.id") < F.col("b.id"))
     for c in block_cols:
@@ -699,7 +629,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return _with_persisted(out, sh_rel)
+    return with_persisted(out, sh_rel)
 
 
 def ngram_containment_pairs(
@@ -709,7 +639,6 @@ def ngram_containment_pairs(
     shingle_n: int = 3,
     threshold: float = 0.6,
     max_df: int | None = None,
-    copartition_pairs: bool = True,
 ) -> DataFrame:
     """DIRECTED n-gram containment pairs: C(src→dst) = |src ∩ dst| / |src|.
 
@@ -732,7 +661,7 @@ def ngram_containment_pairs(
     recall for pairs glued solely by boilerplate shingles is the explicit
     trade. Default ``None`` = exact (this corpus's df skew is mild).
 
-    ``copartition_pairs``: same probe-side hash(src) co-partitioning as
+    The probe side gets the same hash(src) co-partitioning as
     :func:`ngram_jaccard_pairs` — every directed pair (src, dst) lives in
     src's partition, so the (src_id, dst_id) count aggregate runs with no
     exchange; see the trade note there."""
@@ -757,7 +686,7 @@ def ngram_containment_pairs(
             .select("tok")
         )
         postings = base.join(F.broadcast(hot), ["tok"], "left_anti")
-    probe = postings.repartition(F.col("id")) if copartition_pairs else postings
+    probe = postings.repartition(F.col("id"))
     a, b = probe.alias("a"), postings.alias("b")
     # Aggregate UNDIRECTED (a.id < b.id) and emit both directions from the
     # aggregated pair afterwards: |src∩dst| is symmetric and both set sizes
@@ -802,7 +731,7 @@ def ngram_containment_pairs(
         )
         .filter(F.col("containment") >= threshold)
     )
-    return _with_persisted(out, sh_rel)
+    return with_persisted(out, sh_rel)
 
 
 # ---------------------------------------------------------------------------
@@ -973,7 +902,7 @@ def simhash_candidates(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _with_persisted(out, sig, shingles)
+    return with_persisted(out, sig, shingles)
 
 
 # ---------------------------------------------------------------------------
@@ -1061,7 +990,7 @@ def embedding_near_duplicates(
         )
         .filter(F.col("cos") >= threshold)
     )
-    return _with_persisted(out, sketch)
+    return with_persisted(out, sketch)
 
 
 def _dim_of(df: DataFrame, emb_col: str) -> int:

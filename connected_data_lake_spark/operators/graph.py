@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from connected_data_lake_spark.localrel import local_df
-from connected_data_lake_spark.operators.dedup import register_persist
+from connected_data_lake_spark.sources.tables import register_persist
 
 __all__ = [
     "CCDiagnostics",

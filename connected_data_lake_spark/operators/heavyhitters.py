@@ -39,7 +39,7 @@ def heavy_hitters(df: DataFrame, item_col: str, k: int) -> DataFrame:
     rows), as ``(item, cnt)`` — computed with the two-phase candidate /
     verify plan above. ``k`` bounds both the result size (< k items) and
     the per-partition candidate memory."""
-    from connected_data_lake_spark.operators.dedup import _with_persisted
+    from connected_data_lake_spark.sources.tables import with_persisted
 
     items = df.select(F.col(item_col).alias("item"))
 
@@ -85,4 +85,4 @@ def heavy_hitters(df: DataFrame, item_col: str, k: int) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
         .filter(F.col("cnt") * k > F.lit(n))
     )
-    return _with_persisted(verified, cand_all)
+    return with_persisted(verified, cand_all)

@@ -54,7 +54,7 @@ range-shuffle (the aggregated relation is persisted on both sides of the
 exchange, so the RangePartitioner sampling pass and the offset aggregate
 read the cache instead of re-executing the aggregate) + one broadcast of
 the per-(partition, group) offset relation; the caller releases the two
-cached relations via ``operators.dedup.release_index`` (suite runners
+cached relations via ``sources.tables.release_index`` (suite runners
 free session-wide via ``release_session_indexes``).
 """
 
@@ -278,7 +278,7 @@ def _range_strategy(cnt, nn, g, fractions, out_cols):
     The cross-partition pieces of the within-group ordering: the offset
     splices the cumulative count, ``_next_first`` splices ``lead`` (the
     first value of the group's next populated partition)."""
-    from connected_data_lake_spark.operators.dedup import _with_persisted
+    from connected_data_lake_spark.sources.tables import with_persisted
 
     # Persisted: RangePartitioner SAMPLES its child to place the range
     # boundaries, which would re-execute the upstream aggregate a second
@@ -324,7 +324,7 @@ def _range_strategy(cnt, nn, g, fractions, out_cols):
             F.coalesce(F.lead("_v").over(wsort), F.col("_next_first")),
         )
     )
-    return _with_persisted(
+    return with_persisted(
         marked.groupBy(*g).agg(*_interp_aggs(fractions, out_cols)),
         cnt,
         parts,

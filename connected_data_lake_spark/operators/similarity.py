@@ -36,7 +36,8 @@ from pyspark.sql.window import Window
 
 from connected_data_lake_spark.functions import vectors as VX
 from connected_data_lake_spark.localrel import local_df
-from connected_data_lake_spark.operators.dedup import _with_persisted, spread
+from connected_data_lake_spark.operators.dedup import spread
+from connected_data_lake_spark.sources.tables import with_persisted
 
 
 def make_planes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float]]:
@@ -216,7 +217,7 @@ def knn_sketch(
     out, qk = _sketch_probe_plan(
         sk, queries, k, emb_col, id_col, n_bits, candidates_per_query, seed
     )
-    return _with_persisted(out, sk, qk)
+    return with_persisted(out, sk, qk)
 
 
 def sketch_index(
@@ -261,7 +262,7 @@ def knn_sketch_probe(
         index, queries, k, emb_col, id_col, n_bits, candidates_per_query, seed,
         dim,
     )
-    return _with_persisted(out, qk)
+    return with_persisted(out, qk)
 
 
 def _sketch_probe_plan(
@@ -343,7 +344,7 @@ def ivf_index(
         model.transform(feat)
         .select(F.col("_id"), F.col("prediction").alias("cell"))
     )
-    indexed = _with_persisted(df.join(assigned, df[id_col] == assigned["_id"]).drop("_id"), feat)
+    indexed = with_persisted(df.join(assigned, df[id_col] == assigned["_id"]).drop("_id"), feat)
     centroids = [c.tolist() for c in model.clusterCenters()]
     return indexed, centroids
 
@@ -637,7 +638,7 @@ def knn_pq(
         .withColumn("rank", F.row_number().over(w_cos).cast("int"))
         .filter(F.col("rank") <= k)
     )
-    return _with_persisted(out, *persisted)
+    return with_persisted(out, *persisted)
 
 
 def recall_at_k(exact: DataFrame, approx: DataFrame, k: int = 10) -> float:

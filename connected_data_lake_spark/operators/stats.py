@@ -41,7 +41,7 @@ def ks_two_sample(
     (n1+n2))``, the input to the asymptotic Kolmogorov distribution.
     Raises ``ValueError`` when either sample is empty (the statistic is
     undefined). The caller owns unpersisting the attached relation via
-    ``operators.dedup.release_index``.
+    ``sources.tables.release_index``.
 
     Determinism invariant (ADVICE r8): the per-partition base offsets are
     collected from the persisted ``parts`` and then reused by the windowed
@@ -54,7 +54,7 @@ def ks_two_sample(
     persist for a checkpoint of only half the pipeline) would void this;
     keep offsets and window reading the same persisted relation.
     """
-    from connected_data_lake_spark.operators.dedup import _with_persisted
+    from connected_data_lake_spark.sources.tables import with_persisted
 
     spark = df.sparkSession
     value = F.col(value_col) if isinstance(value_col, str) else value_col
@@ -119,4 +119,4 @@ def ks_two_sample(
             F.max(F.abs(F.col("f1") - F.col("f2"))) * F.lit(scale), 4
         ).alias("ks_scaled"),
     )
-    return _with_persisted(out, g, parts)
+    return with_persisted(out, g, parts)

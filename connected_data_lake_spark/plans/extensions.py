@@ -24,7 +24,7 @@ from connected_data_lake_spark.operators import graph as GR
 from connected_data_lake_spark.operators import multimodal as MM
 from connected_data_lake_spark.operators import similarity as SIM
 from connected_data_lake_spark.plans import query
-from connected_data_lake_spark.sources.tables import load_table
+from connected_data_lake_spark.sources.tables import load_table, release_index, with_persisted
 
 #: normalization shared by every text oracle (must match TX.normalize_text)
 _NORM = "lower(trim(regexp_replace({c}, '[ \\t\\n\\r]+', ' ', 'g')))"
@@ -564,7 +564,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter((F.col("doc_id") % 5) == 0)
     corp_fp, band_idx, sh_c = _dedup_corpus_index(spark, sf_dir)
     out = DD.incremental_classify(batch, corp_fp, band_idx, sh_c, threshold=0.5)
-    return DD._with_persisted(
+    return with_persisted(
         out.orderBy("doc_id"), *getattr(out, "_cdl_persisted", ())
     )
 
@@ -1087,7 +1087,7 @@ def text_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-    return DD._with_persisted(out, chunks)
+    return with_persisted(out, chunks)
 
 
 #: lazy per-(session, sf_dir) PQ code index: codebooks retrain
@@ -1240,8 +1240,6 @@ def _ivf_indexed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
                 indexed.repartition("cell").write.mode("overwrite").partitionBy(
                     "cell"
                 ).parquet(path)
-            from connected_data_lake_spark.operators.dedup import release_index
-
             release_index(indexed)  # training cache no longer needed
             tmp = f"{cpath}.tmp-{os.getpid()}"
             with open(tmp, "w") as fh:
@@ -1959,7 +1957,7 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cluster_size", F.count("*").over(w))
         .orderBy("doc_id")
     )
-    return DD._with_persisted(out, comp, *getattr(near_pairs, "_cdl_persisted", ()))
+    return with_persisted(out, comp, *getattr(near_pairs, "_cdl_persisted", ()))
 
 
 @query(
@@ -2001,7 +1999,7 @@ def dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cluster_size", F.count("*").over(w))
         .orderBy("doc_id")
     )
-    return DD._with_persisted(out, *getattr(near_pairs, "_cdl_persisted", ()))
+    return with_persisted(out, *getattr(near_pairs, "_cdl_persisted", ()))
 
 
 @query(
@@ -2159,7 +2157,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-    return DD._with_persisted(out, vocab)
+    return with_persisted(out, vocab)
 
 
 @query(
@@ -2241,7 +2239,7 @@ def text_logprob_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-    return DD._with_persisted(out, c2, score)
+    return with_persisted(out, c2, score)
 
 
 @query(
@@ -2404,7 +2402,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"(cum - 1) div {bin_tokens}").alias("end_bin"),
         F.expr(f"(cum - n_tokens) % {bin_tokens}").alias("offset_in_bin"),
     ).orderBy("doc_id")
-    return DD._with_persisted(out, parts)
+    return with_persisted(out, parts)
 
 
 @query(
@@ -3262,7 +3260,7 @@ def pipeline_rag_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang")
     )
-    return DD._with_persisted(out, ch)
+    return with_persisted(out, ch)
 
 
 @query(
@@ -4144,7 +4142,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     aw_row = pair.agg(F.avg("w")).collect()[0][0]
     if aw_row is None:  # empty edge relation: avg is NULL (ADVICE r8) —
         # short-circuit to an empty result with the declared schema
-        return DD._with_persisted(
+        return with_persisted(
             spark.createDataFrame(
                 [],
                 "nationkey bigint, degree bigint, n_triangles bigint, "
@@ -4190,7 +4188,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("nationkey")
     )
-    return DD._with_persisted(out, pair)
+    return with_persisted(out, pair)
 
 
 def _kmeans_assign_sql(src: str, k: int, n_iter: int) -> str:

@@ -15,6 +15,11 @@ Spark 4.x with NTZ inference, plain ``timestamp[us]`` → TIMESTAMP_NTZ.
 writer, so a schema drift fails loudly at load rather than deep in a query.
 Integer arithmetic only (``DIV`` / ``unix_micros``) — int64 nanoseconds do
 not fit a double's 53-bit mantissa, so float division would corrupt values.
+
+This module also owns the session's cache lifecycle: the pinned table
+registry (:func:`persist_tables`, :func:`stray_cache_ids`) and the
+registry of index relations that operators persist (:func:`with_persisted`,
+:func:`release_index`, :func:`release_session_indexes`).
 """
 
 from __future__ import annotations
@@ -201,6 +206,81 @@ def stray_cache_ids(spark: SparkSession, keep_ids: set[int]) -> set[int]:
         else:
             out.add(rid)
     return out
+
+
+#: OPT-IN registry of every index relation persisted (or
+#: localCheckpoint'ed) by an operator in this process, until released.
+#: The per-result ``_cdl_persisted`` attribute is lost as soon as a caller
+#: wraps the result (``.orderBy(...)`` returns a fresh DataFrame), so a
+#: suite runner that must release per-query caches between timed runs
+#: (bench.py) enables :func:`track_session_indexes` and drains THIS
+#: registry instead — a proper ``DataFrame.unpersist`` per entry, which
+#: drops the CacheManager entry AND storage (a storage-only sweep left
+#: stale entries whose unmaterialized relations re-ran lineage per
+#: consumer; measured 4.4 -> 22 s). Tracking is OFF by default (ADVICE
+#: r9): a long-lived library consumer that never calls
+#: ``release_session_indexes`` must not accumulate strong DataFrame
+#: references here — plain use keeps the attach-to-result-only behavior.
+_LIVE_INDEX_RELATIONS: list[DataFrame] = []
+_TRACK_SESSION_INDEXES = False
+
+
+def track_session_indexes(enabled: bool = True) -> None:
+    """Turn the session-wide index registry on/off (default off).
+
+    Suite runners with a between-runs release cadence (bench.py) enable
+    it so :func:`release_session_indexes` can free every operator-built
+    cache regardless of caller-side wrapping; plain library sessions
+    leave it off and release via :func:`release_index` on results they
+    still hold (or let Spark's LRU evict)."""
+    global _TRACK_SESSION_INDEXES
+    _TRACK_SESSION_INDEXES = enabled
+    if not enabled:
+        _LIVE_INDEX_RELATIONS.clear()
+
+
+def with_persisted(out: DataFrame, *persisted: DataFrame) -> DataFrame:
+    """Attach the persisted index relations backing ``out`` so callers can
+    release them: ``release_index(df)`` unpersists after materialization.
+    Long-lived sessions that re-run an index build without releasing the
+    previous one would otherwise accumulate cached blocks until eviction.
+    When session tracking is enabled, each relation is also recorded in
+    :data:`_LIVE_INDEX_RELATIONS` (see :func:`release_session_indexes`)."""
+    out._cdl_persisted = list(persisted)  # type: ignore[attr-defined]
+    if _TRACK_SESSION_INDEXES:
+        _LIVE_INDEX_RELATIONS.extend(persisted)
+    return out
+
+
+def register_persist(df: DataFrame) -> DataFrame:
+    """Record a persisted/checkpointed relation for session-wide release
+    (operators that RETURN a block-backed relation — connected-components
+    labels, pagerank ranks — register it here so bench can free it).
+    No-op unless :func:`track_session_indexes` enabled the registry."""
+    if _TRACK_SESSION_INDEXES:
+        _LIVE_INDEX_RELATIONS.append(df)
+    return df
+
+
+def release_index(df: DataFrame) -> None:
+    """Unpersist the cached index relations attached by
+    :func:`with_persisted` (no-op for DataFrames without one)."""
+    for p in getattr(df, "_cdl_persisted", ()):  # pragma: no branch
+        p.unpersist()
+        try:
+            _LIVE_INDEX_RELATIONS.remove(p)
+        except ValueError:
+            pass
+
+
+def release_session_indexes() -> None:
+    """Unpersist EVERY index relation recorded since the last release.
+
+    The between-runs hook for suite runners: unlike ``release_index`` it
+    does not depend on the result DataFrame still carrying its attachment
+    through caller-side wrapping."""
+    while _LIVE_INDEX_RELATIONS:
+        _LIVE_INDEX_RELATIONS.pop().unpersist()
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from connected_data_lake_spark.operators import dedup as DD
+from connected_data_lake_spark.sources.tables import release_index
 
 
 def classify_stream(
@@ -61,7 +62,7 @@ def classify_stream(
             threshold=threshold,
         )
         out.write.mode("append").parquet(out_path)
-        DD.release_index(out)
+        release_index(out)
 
     return (
         docs_stream.writeStream.foreachBatch(_classify)

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from connected_data_lake_spark.operators import dedup as DD
+from connected_data_lake_spark.sources import tables as TB
 from connected_data_lake_spark.sources.tables import load_table
 
 
@@ -186,19 +187,19 @@ def test_session_index_registry_is_opt_in(docs):
     references in the module-global registry — only a runner that opted
     in (bench.py) pays for session-wide tracking, and disabling again
     clears what was recorded."""
-    assert DD._TRACK_SESSION_INDEXES is False  # library default
-    before = len(DD._LIVE_INDEX_RELATIONS)
+    assert TB._TRACK_SESSION_INDEXES is False  # library default
+    before = len(TB._LIVE_INDEX_RELATIONS)
     out = DD.minhash_lsh_candidates(docs, num_hashes=32, bands=8)
     out.count()
-    assert len(DD._LIVE_INDEX_RELATIONS) == before  # nothing retained
+    assert len(TB._LIVE_INDEX_RELATIONS) == before  # nothing retained
     # result-attached release still works without the registry
-    DD.release_index(out)
+    TB.release_index(out)
     try:
-        DD.track_session_indexes(True)
+        TB.track_session_indexes(True)
         out2 = DD.minhash_lsh_candidates(docs, num_hashes=32, bands=8)
         out2.count()
-        assert len(DD._LIVE_INDEX_RELATIONS) > 0
-        DD.release_session_indexes()
-        assert len(DD._LIVE_INDEX_RELATIONS) == 0
+        assert len(TB._LIVE_INDEX_RELATIONS) > 0
+        TB.release_session_indexes()
+        assert len(TB._LIVE_INDEX_RELATIONS) == 0
     finally:
-        DD.track_session_indexes(False)
+        TB.track_session_indexes(False)

@@ -115,7 +115,7 @@ def test_range_strategy_matches_window_strategy(spark):
         df, ["g"], "v", FRACTIONS, outs, strategy="range"
     )
     rngd = {r["g"]: [r[o] for o in outs] for r in rng_out.collect()}
-    from connected_data_lake_spark.operators.dedup import release_index
+    from connected_data_lake_spark.sources.tables import release_index
 
     release_index(rng_out)
     assert set(win) == set(rngd) == {"a", "b", "c", "d"}

@@ -6,8 +6,8 @@ from __future__ import annotations
 
 import pytest
 
-from connected_data_lake_spark.operators.dedup import release_index
 from connected_data_lake_spark.operators.stats import ks_two_sample
+from connected_data_lake_spark.sources.tables import release_index
 
 
 def _ks(spark, rows):

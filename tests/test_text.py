@@ -91,7 +91,7 @@ def test_pii_scrub_order_email_before_phone(spark):
 
 
 def test_unigram_logprob_flags_rare_tokens(spark, sf_dir):
-    from connected_data_lake_spark.operators.dedup import release_index
+    from connected_data_lake_spark.sources.tables import release_index
     from connected_data_lake_spark.plans import spec_of
 
     df = spec_of("text_logprob_unigram").spark(spark, sf_dir)
@@ -140,7 +140,7 @@ def test_chunk_overlap_reconstructs_token_stream(spark, sf_dir):
 
 
 def test_tfidf_ranks_rare_terms_over_common(spark, sf_dir):
-    from connected_data_lake_spark.operators.dedup import release_index
+    from connected_data_lake_spark.sources.tables import release_index
     from connected_data_lake_spark.plans import spec_of
 
     df = spec_of("text_tfidf_keywords").spark(spark, sf_dir)

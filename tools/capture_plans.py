@@ -6,6 +6,11 @@ declared query with ``--all``). The files are the audit artifact for
 optimization rounds: plan-shape claims in the round doc point at
 these, captured before and after each change.
 
+Plans are captured in bench.py's state: after ``bench.setup`` (offline
+indexes built, table registry pinned) and one ``bench.run_once`` of the
+query, so the capture shows the plan the timed runs execute. The run's
+plan/exec seconds are printed next to each written path.
+
     python tools/capture_plans.py --suffix before name1 name2 ...
     python tools/capture_plans.py --suffix before --all
 """
@@ -39,14 +44,19 @@ def main() -> None:
     out_dir = os.path.join(REPO, "plans", round_dir)
     os.makedirs(out_dir, exist_ok=True)
 
+    from bench import run_once, setup
     from connected_data_lake_spark.plans import all_specs, spec_of
     from connected_data_lake_spark.session import get_spark
+    from connected_data_lake_spark.sources.tables import (
+        release_index,
+        release_session_indexes,
+    )
 
     spark = get_spark("cdl-spark-capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    specs = all_specs()
     if capture_all:
-        names = sorted(specs)
+        names = sorted(all_specs())
+    ids = setup(spark, sf_dir)
 
     for name in names:
         try:
@@ -54,24 +64,23 @@ def main() -> None:
         except KeyError:
             print(f"# unknown query: {name}", file=sys.stderr)
             continue
+        timing = ""
         try:
+            build_s, exec_s, ids = run_once(spark, spec, sf_dir, ids)
+            timing = f" (plan {build_s:.3f}s, exec {exec_s:.3f}s)"
             df = spec.spark(spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
+            release_index(df)
+            release_session_indexes()
         except Exception as exc:  # noqa: BLE001
             plan = f"# capture failed: {exc}"
             print(f"# {name}: {exc}", file=sys.stderr)
         path = os.path.join(out_dir, f"{spec.name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
-        print(f"wrote {path}")
-        # release anything the spec persisted during construction
-        from connected_data_lake_spark.operators.dedup import (
-            release_session_indexes,
-        )
-
-        release_session_indexes()
+        print(f"wrote {path}{timing}")
 
 
 if __name__ == "__main__":
