@@ -11,6 +11,8 @@ are declared rows-only and verified by dedicated unit tests instead
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -424,6 +426,46 @@ def _artifact_token(sf_dir: str, *tables: str) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
 
 
+#: (temp dir, artifact name, sf_dir) → built artifact path
+_BUILT: dict[tuple[str, str, str], str] = {}
+
+
+def _built(
+    name: str, sf_dir: str, tables: tuple[str, ...], build: Callable[[str], None]
+) -> str:
+    """Path of the build-once artifact ``<tempdir>/cdl_<name>_<token>``
+    (token: :func:`_artifact_token` over ``tables``), running
+    ``build(path)`` at most once per token. Every on-disk lake fixture
+    and offline index directory goes through here. Builders write in
+    place — Iceberg manifests record absolute file URIs, so a table
+    built elsewhere and renamed would point at the old location. Crash
+    and race safety therefore live in two SIBLING files no table reader
+    lists:
+    ``<path>.lock`` (an exclusive ``flock`` held across check and build,
+    so concurrent builders in any process or thread run ``build`` once)
+    and ``<path>.done`` (written last; without it any ``path`` on disk
+    is a partial build and is removed before ``build`` runs). The temp
+    dir is read per call: a caller may repoint ``tempfile.tempdir``."""
+    import fcntl
+    import os
+    import shutil
+    import tempfile
+
+    key = (tempfile.gettempdir(), name, sf_dir)
+    if key not in _BUILT:
+        path = os.path.join(key[0], f"cdl_{name}_{_artifact_token(sf_dir, *tables)}")
+        done = f"{path}.done"
+        if not os.path.isfile(done):
+            with open(f"{path}.lock", "a") as lock:
+                fcntl.flock(lock, fcntl.LOCK_EX)
+                if not os.path.isfile(done):
+                    shutil.rmtree(path, ignore_errors=True)
+                    build(path)
+                    open(done, "w").close()
+        _BUILT[key] = path
+    return _BUILT[key]
+
+
 #: session-scoped handles to the on-disk incremental-dedup corpus index
 _DEDUP_IDX_CACHE: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
 
@@ -431,55 +473,32 @@ _DEDUP_IDX_CACHE: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
 def _dedup_corpus_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Offline index build for :func:`dedup_incremental` — once per corpus,
-    like the IVF coarse quantizer below: writes the corpus side's
-    (fingerprint → min doc_id) relation, banded MinHash signature relation
-    (operators.dedup.minhash_bands) and hashed shingle-set relation to
-    parquet, and returns read-back handles. At cluster scale these are the
-    maintained index tables an ingest pipeline appends to; per-batch query
-    cost then excludes every corpus-side pass."""
+    """Offline index build for :func:`dedup_incremental` — once per corpus
+    (:func:`_built`), like the IVF coarse quantizer below: writes the
+    corpus side's (fingerprint → min doc_id) relation, banded MinHash
+    signature relation (operators.dedup.minhash_bands) and hashed
+    shingle-set relation to parquet, and returns read-back handles. At
+    cluster scale these are the maintained index tables an ingest
+    pipeline appends to; per-batch query cost then excludes every
+    corpus-side pass."""
     import os
-    import tempfile
 
-    import shutil
+    def build(path: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        corpus = docs.filter((F.col("doc_id") % 5) != 0)
+        corpus.groupBy(TX.fingerprint("text").alias("fp")).agg(
+            F.min("doc_id").alias("e_match")
+        ).write.parquet(os.path.join(path, "fp"))
+        sh_c = DD.shingle_relation(corpus)
+        DD.minhash_bands(sh_c, num_hashes=128, bands=32).write.parquet(
+            os.path.join(path, "bands")
+        )
+        sh_c.write.parquet(os.path.join(path, "shingles"))
+        sh_c.unpersist()
 
     key = f"{id(spark)}:{sf_dir}"
     if key not in _DEDUP_IDX_CACHE:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"cdl_dedupidx_v1_{_artifact_token(sf_dir, 'documents')}",
-        )
-        # Same commit discipline as _gt_topk below: a crashed build must
-        # not leave a half-written index a later process trusts (the three
-        # relations are written sequentially, so "fp exists" proves nothing
-        # about "shingles"). Build into a pid-suffixed dir, install with an
-        # atomic rename, trust only a directory carrying the final
-        # relation's _SUCCESS; never replace a complete artifact.
-        done = os.path.join(path, "shingles", "_SUCCESS")
-        if not os.path.isfile(done):  # offline build step, once per corpus
-            tmp = f"{path}.build.{os.getpid()}"
-            docs = load_table(spark, sf_dir, "documents")
-            corpus = docs.filter((F.col("doc_id") % 5) != 0)
-            corpus.groupBy(TX.fingerprint("text").alias("fp")).agg(
-                F.min("doc_id").alias("e_match")
-            ).write.mode("overwrite").parquet(os.path.join(tmp, "fp"))
-            sh_c = DD.shingle_relation(corpus)
-            DD.minhash_bands(sh_c, num_hashes=128, bands=32).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(tmp, "bands"))
-            sh_c.write.mode("overwrite").parquet(os.path.join(tmp, "shingles"))
-            sh_c.unpersist()
-            if os.path.isfile(done):
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-            else:
-                try:
-                    if os.path.isdir(path):  # stale partial
-                        stale = f"{path}.stale.{os.getpid()}"
-                        os.rename(path, stale)
-                        shutil.rmtree(stale, ignore_errors=True)
-                    os.rename(tmp, path)
-                except OSError:
-                    shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+        path = _built("dedupidx_v1", sf_dir, ("documents",), build)
         _DEDUP_IDX_CACHE[key] = (
             spark.read.parquet(os.path.join(path, "fp")),
             spark.read.parquet(os.path.join(path, "bands")),
@@ -783,42 +802,16 @@ def _emb_dim(spark: SparkSession, sf_dir: str) -> int:
 
 
 def _gt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        queries = emb.filter(F.col("vec_id").isin(0, 1, 2))
+        SIM.knn_brute_force(emb, queries, k=10).write.parquet(path)
 
     key = f"{id(spark)}:{sf_dir}"
     if key not in _GT_CACHE:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"cdl_knngt_{_artifact_token(sf_dir, 'embeddings')}",
+        _GT_CACHE[key] = spark.read.parquet(
+            _built("knngt", sf_dir, ("embeddings",), build)
         )
-        # Trust the artifact only when Spark's _SUCCESS commit marker is
-        # present: a crashed brute-force build leaves a partial directory
-        # that would otherwise silently corrupt every probe contract built
-        # on it. Build into a pid-suffixed temp dir; at install time,
-        # re-check _SUCCESS (a concurrent builder may have won — never
-        # replace a complete artifact, so readers mid-scan can't see it
-        # vanish), rename any stale partial ASIDE (atomic) rather than
-        # rmtree-ing in place (a crash between rmtree and rename must not
-        # leave no artifact), then rename the build into place.
-        if not os.path.isfile(os.path.join(path, "_SUCCESS")):
-            tmp = f"{path}.build.{os.getpid()}"
-            emb = load_table(spark, sf_dir, "embeddings")
-            queries = emb.filter(F.col("vec_id").isin(0, 1, 2))
-            SIM.knn_brute_force(emb, queries, k=10).write.mode("overwrite").parquet(tmp)
-            if os.path.isfile(os.path.join(path, "_SUCCESS")):
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-            else:
-                try:
-                    if os.path.isdir(path):  # stale PARTIAL (no _SUCCESS)
-                        stale = f"{path}.stale.{os.getpid()}"
-                        os.rename(path, stale)
-                        shutil.rmtree(stale, ignore_errors=True)
-                    os.rename(tmp, path)
-                except OSError:
-                    shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-        _GT_CACHE[key] = spark.read.parquet(path)
     return _GT_CACHE[key]
 
 
@@ -1090,40 +1083,31 @@ def text_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_persisted(out, chunks)
 
 
-#: lazy per-(session, sf_dir) PQ code index: codebooks retrain
-#: deterministically per corpus (seeded sample + seeded init — numpy
-#: milliseconds), codes are the written artifact; same offline-build
-#: convention as the IVF cells and the dedup corpus index.
+#: lazy per-(session, sf_dir) handles to the PQ code index, built once per
+#: corpus by :func:`_built` like the IVF cells and the dedup corpus index:
+#: the code table plus its seeded codebooks as a ``_codebooks.npy`` sidecar.
 _PQ_CACHE: dict[str, tuple] = {}
 
 
 def _pq_indexed(spark: SparkSession, sf_dir: str):
     import os
-    import tempfile
 
     import numpy as np
 
+    # codebooks persist WITH the code table (see _ivf_indexed: an index
+    # that needs in-session retraining isn't offline)
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        books = SIM.pq_train(emb)
+        emb.select(
+            "vec_id", SIM.pq_encode("embedding", books).alias("codes")
+        ).write.parquet(path)
+        np.save(os.path.join(path, "_codebooks.npy"), books)
+
     key = f"{id(spark)}:{sf_dir}"
     if key not in _PQ_CACHE:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"cdl_pq_{_artifact_token(sf_dir, 'embeddings')}",
-        )
-        # codebooks persist WITH the code table (see _ivf_indexed: an
-        # index that needs in-session retraining isn't offline)
-        bpath = os.path.join(path, "_codebooks.npy")
-        if os.path.exists(bpath):
-            books = np.load(bpath)
-        else:  # offline build step, once per corpus
-            emb = load_table(spark, sf_dir, "embeddings")
-            books = SIM.pq_train(emb)
-            if not os.path.isdir(path):
-                emb.select(
-                    "vec_id", SIM.pq_encode("embedding", books).alias("codes")
-                ).write.parquet(path)
-            tmp = os.path.join(path, f"_cb-tmp-{os.getpid()}.npy")
-            np.save(tmp, books)
-            os.replace(tmp, bpath)
+        path = _built("pq", sf_dir, ("embeddings",), build)
+        books = np.load(os.path.join(path, "_codebooks.npy"))
         _PQ_CACHE[key] = (books, spark.read.parquet(path))
     return _PQ_CACHE[key]
 
@@ -1208,43 +1192,31 @@ _IVF_CACHE: dict[str, tuple[DataFrame, list]] = {}
 
 
 def _ivf_indexed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
-    import os
-    import tempfile
-
     import json
+    import os
+
+    # centroids persist WITH the index (underscore prefix = invisible to
+    # the parquet reader, like _SUCCESS): an on-disk index a fresh session
+    # must re-train k-means to use isn't an offline index — every new
+    # session (the correctness driver, a user process) paid the full
+    # training job before its first probe.
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        indexed, centroids = SIM.ivf_index(emb, n_cells=32, max_iter=5)
+        # repartition by cell first: without it every shuffle partition
+        # writes a file into every cell directory (32 tasks x 32 cells ≈
+        # 1000 tiny files), and the probe-side read pays file listing +
+        # footer decode per file (measured ~9s first touch -> <1s)
+        indexed.repartition("cell").write.partitionBy("cell").parquet(path)
+        release_index(indexed)  # training cache no longer needed
+        with open(os.path.join(path, "_centroids.json"), "w") as fh:
+            json.dump(centroids, fh)
 
     key = f"{id(spark)}:{sf_dir}"
     if key not in _IVF_CACHE:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"cdl_ivf_{_artifact_token(sf_dir, 'embeddings')}",
-        )
-        # centroids persist WITH the index (underscore prefix = invisible
-        # to the parquet reader, like _SUCCESS): an on-disk index a fresh
-        # session must re-train k-means to use isn't an offline index —
-        # every new session (the correctness driver, a user process) paid
-        # the full training job before its first probe.
-        cpath = os.path.join(path, "_centroids.json")
-        if os.path.exists(cpath):
-            with open(cpath) as fh:
-                centroids = json.load(fh)
-        else:  # offline build step, once per corpus
-            emb = load_table(spark, sf_dir, "embeddings")
-            indexed, centroids = SIM.ivf_index(emb, n_cells=32, max_iter=5)
-            if not os.path.isdir(path):
-                # repartition by cell first: without it every shuffle
-                # partition writes a file into every cell directory (32
-                # tasks x 32 cells ≈ 1000 tiny files), and the probe-side
-                # read pays file listing + footer decode per file
-                # (measured ~9s first touch -> <1s)
-                indexed.repartition("cell").write.mode("overwrite").partitionBy(
-                    "cell"
-                ).parquet(path)
-            release_index(indexed)  # training cache no longer needed
-            tmp = f"{cpath}.tmp-{os.getpid()}"
-            with open(tmp, "w") as fh:
-                json.dump(centroids, fh)
-            os.replace(tmp, cpath)
+        path = _built("ivf", sf_dir, ("embeddings",), build)
+        with open(os.path.join(path, "_centroids.json")) as fh:
+            centroids = json.load(fh)
         _IVF_CACHE[key] = (spark.read.parquet(path), centroids)
     return _IVF_CACHE[key]
 
@@ -2829,22 +2801,19 @@ _SRP_CACHE: dict[str, DataFrame] = {}
 
 def _sketch_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """On-disk SRP sketch index (neighbor_id, emb, sig), built once per
-    corpus like the IVF/PQ artifacts. No model sidecar: the hyperplanes
+    corpus by :func:`_built` like the IVF/PQ artifacts. No model sidecar: the hyperplanes
     are seeded and trainless, so a fresh session reconstructs them from
     the seed and probes the parquet directly (similarity.sketch_index)."""
-    import os
-    import tempfile
+
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        SIM.sketch_index(emb, dim=_emb_dim(spark, sf_dir)).write.parquet(path)
 
     key = f"{id(spark)}:{sf_dir}"
     if key not in _SRP_CACHE:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"cdl_srp_{_artifact_token(sf_dir, 'embeddings')}",
+        _SRP_CACHE[key] = spark.read.parquet(
+            _built("srp", sf_dir, ("embeddings",), build)
         )
-        if not os.path.isdir(path):  # offline build step, once per corpus
-            emb = load_table(spark, sf_dir, "embeddings")
-            SIM.sketch_index(emb, dim=_emb_dim(spark, sf_dir)).write.parquet(path)
-        _SRP_CACHE[key] = spark.read.parquet(path)
     return _SRP_CACHE[key]
 
 
@@ -4249,63 +4218,43 @@ _SEMDEDUP_CACHE: dict[str, DataFrame] = {}
 
 def _semdedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline clustering build for :func:`curation_semdedup` — SemDeDup
-    clusters its corpus ONCE (the expensive step) and prunes against that
-    assignment thereafter; re-clustering per prune run would be like
-    re-training the IVF quantizer per probe. Same artifact discipline as
-    _dedup_corpus_index: content-versioned path, pid-suffixed build dir,
-    atomic rename, trust only _SUCCESS, never replace a complete artifact.
+    clusters its corpus ONCE (the expensive step, via :func:`_built`) and
+    prunes against that assignment thereafter; re-clustering per prune
+    run would be like re-training the IVF quantizer per probe.
     Returns the (vec_id, cluster_id, embedding) member relation of the
     AUGMENTED corpus (the 25 planted near-duplicates of
     dedup_embedding_neardup, identical arithmetic to the SQL oracle).
     The in-query full-clustering demonstration is
     ``cluster_kmeans_embeddings`` — that query always pays the Lloyd
     rounds."""
-    import os
-    import shutil
-    import tempfile
-
     from connected_data_lake_spark.operators import clustering as KM
+
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        aug = emb.select(
+            "vec_id", VX.as_double("embedding").alias("embedding")
+        ).unionAll(
+            emb.filter(F.col("vec_id") < 25).select(
+                (F.col("vec_id") + 100000).alias("vec_id"),
+                F.transform(
+                    VX.as_double("embedding"), lambda x: x + F.lit(0.005)
+                ).alias("embedding"),
+            )
+        )
+        aug = aug.persist()
+        assign, _cent = KM.kmeans(
+            aug, id_col="vec_id", vec_col="embedding", k=8, n_iter=3
+        )
+        assign.join(aug, "vec_id").select(
+            "vec_id", "cluster_id", "embedding"
+        ).write.parquet(path)
+        aug.unpersist()
 
     key = f"{id(spark)}:{sf_dir}"
     if key not in _SEMDEDUP_CACHE:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"cdl_semdedup_{_artifact_token(sf_dir, 'embeddings')}",
+        _SEMDEDUP_CACHE[key] = spark.read.parquet(
+            _built("semdedup", sf_dir, ("embeddings",), build)
         )
-        done = os.path.join(path, "_SUCCESS")
-        if not os.path.isfile(done):  # offline build step, once per corpus
-            tmp = f"{path}.build.{os.getpid()}"
-            emb = load_table(spark, sf_dir, "embeddings")
-            aug = emb.select(
-                "vec_id", VX.as_double("embedding").alias("embedding")
-            ).unionAll(
-                emb.filter(F.col("vec_id") < 25).select(
-                    (F.col("vec_id") + 100000).alias("vec_id"),
-                    F.transform(
-                        VX.as_double("embedding"), lambda x: x + F.lit(0.005)
-                    ).alias("embedding"),
-                )
-            )
-            aug = aug.persist()
-            assign, _cent = KM.kmeans(
-                aug, id_col="vec_id", vec_col="embedding", k=8, n_iter=3
-            )
-            assign.join(aug, "vec_id").select(
-                "vec_id", "cluster_id", "embedding"
-            ).write.mode("overwrite").parquet(tmp)
-            aug.unpersist()
-            if os.path.isfile(done):
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-            else:
-                try:
-                    if os.path.isdir(path):  # stale partial
-                        stale = f"{path}.stale.{os.getpid()}"
-                        os.rename(path, stale)
-                        shutil.rmtree(stale, ignore_errors=True)
-                    os.rename(tmp, path)
-                except OSError:
-                    shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-        _SEMDEDUP_CACHE[key] = spark.read.parquet(path)
     return _SEMDEDUP_CACHE[key]
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from connected_data_lake_spark.operators import lakeops as LK
 from connected_data_lake_spark.plans import query
+from connected_data_lake_spark.plans.extensions import _built
 from connected_data_lake_spark.sources.tables import load_table
 
 
@@ -248,15 +249,11 @@ def quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # external Delta table read path (sources/delta.py)
 # ---------------------------------------------------------------------------
 
-#: session-scoped handle to the build-once external Delta fixture
-_DELTA_TBL_CACHE: dict[str, str] = {}
-
 
 def _delta_external_orders(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once external Delta table derived from orders (the artifact
-    pattern of ``_dedup_corpus_index``: tempdir + content token + atomic
-    install). Layout: commit 0 adds files A (o_orderkey%3=0) and B (%3=1);
-    commit 1 REMOVES B and adds C (%3=2) — so reading the latest snapshot
+    """Build-once external Delta table derived from orders. Layout:
+    commit 0 adds files A (o_orderkey%3=0) and B (%3=1); commit 1
+    REMOVES B and adds C (%3=2) — so reading the latest snapshot
     exercises remove-action replay, and ``version=0`` exercises time
     travel, against a log this engine did not write through its own
     manifest format. Data is written executor-side (coalesced Spark
@@ -265,33 +262,20 @@ def _delta_external_orders(spark: SparkSession, sf_dir: str) -> str:
     import json as _json
     import os
     import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
-
-    key = f"{sf_dir}"
-    if key in _DELTA_TBL_CACHE:
-        return _DELTA_TBL_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_deltatbl_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "_delta_log", "00000000000000000001.json")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
 
         def write_one(df: DataFrame, relname: str) -> None:
-            part_dir = os.path.join(tmp, f".stage-{relname}")
+            part_dir = os.path.join(path, f".stage-{relname}")
             df.coalesce(1).write.mode("overwrite").parquet(part_dir)
             part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(tmp, relname))
+            os.replace(part, os.path.join(path, relname))
             shutil.rmtree(part_dir, ignore_errors=True)
 
-        os.makedirs(os.path.join(tmp, "_delta_log"), exist_ok=True)
+        os.makedirs(os.path.join(path, "_delta_log"), exist_ok=True)
         key3 = F.col("o_orderkey") % 3
         write_one(o.filter(key3 == 0), "a.parquet")
         write_one(o.filter(key3 == 1), "b.parquet")
@@ -312,33 +296,22 @@ def _delta_external_orders(spark: SparkSession, sf_dir: str) -> str:
                 "add": {
                     "path": rel,
                     "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(tmp, rel)),
+                    "size": os.path.getsize(os.path.join(path, rel)),
                     "modificationTime": 0,
                     "dataChange": True,
                 }
             }
 
         def commit(version: int, actions: list[dict]) -> None:
-            p = os.path.join(tmp, "_delta_log", f"{version:020d}.json")
+            p = os.path.join(path, "_delta_log", f"{version:020d}.json")
             with open(p, "w") as fh:
                 for a in actions:
                     fh.write(_json.dumps(a) + "\n")
 
         commit(0, [proto, meta, add("a.parquet"), add("b.parquet")])
         commit(1, [{"remove": {"path": "b.parquet", "dataChange": True}}, add("c.parquet")])
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale)
-                    shutil.rmtree(stale, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _DELTA_TBL_CACHE[key] = path
-    return path
+
+    return _built("deltatbl_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -469,9 +442,6 @@ ICEBERG_MANIFEST_ENTRY_SCHEMA = {
     ],
 }
 
-#: session-scoped handle to the build-once external Iceberg fixture
-_ICEBERG_TBL_CACHE: dict[str, str] = {}
-
 
 def _iceberg_external_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once external Iceberg table derived from orders (the same
@@ -487,35 +457,23 @@ def _iceberg_external_orders(spark: SparkSession, sf_dir: str) -> str:
     import json as _json
     import os
     import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
 
-    key = f"{sf_dir}"
-    if key in _ICEBERG_TBL_CACHE:
-        return _ICEBERG_TBL_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_icebergtbl_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "metadata", "version-hint.text")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, "data"))
-        os.makedirs(os.path.join(tmp, "metadata"))
+    def build(path: str) -> None:
+        os.makedirs(os.path.join(path, "data"))
+        os.makedirs(os.path.join(path, "metadata"))
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
 
         def write_one(df: DataFrame, relname: str) -> int:
-            part_dir = os.path.join(tmp, f".stage-{relname}")
+            part_dir = os.path.join(path, f".stage-{relname}")
             df.coalesce(1).write.mode("overwrite").parquet(part_dir)
             part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(tmp, "data", relname))
+            os.replace(part, os.path.join(path, "data", relname))
             shutil.rmtree(part_dir, ignore_errors=True)
-            return os.path.getsize(os.path.join(tmp, "data", relname))
+            return os.path.getsize(os.path.join(path, "data", relname))
 
         key3 = F.col("o_orderkey") % 3
         sizes = {rel: write_one(o.filter(key3 == i), rel)
@@ -539,7 +497,7 @@ def _iceberg_external_orders(spark: SparkSession, sf_dir: str) -> str:
 
         def write_manifest(name: str, entries: list[dict]) -> tuple[str, int]:
             blob = write_ocf(ICEBERG_MANIFEST_ENTRY_SCHEMA, entries)
-            full = os.path.join(tmp, "metadata", name)
+            full = os.path.join(path, "metadata", name)
             with open(full, "wb") as fh:
                 fh.write(blob)
             return f"{path}/metadata/{name}", len(blob)
@@ -573,7 +531,7 @@ def _iceberg_external_orders(spark: SparkSession, sf_dir: str) -> str:
                 for p, ln, snap in manifests
             ]
             blob = write_ocf(ICEBERG_MANIFEST_FILE_SCHEMA, recs)
-            with open(os.path.join(tmp, "metadata", name), "wb") as fh:
+            with open(os.path.join(path, "metadata", name), "wb") as fh:
                 fh.write(blob)
             return f"{path}/metadata/{name}"
 
@@ -629,23 +587,12 @@ def _iceberg_external_orders(spark: SparkSession, sf_dir: str) -> str:
                 {"snapshot-id": 2, "timestamp-ms": 2000},
             ],
         }
-        with open(os.path.join(tmp, "metadata", "v1.metadata.json"), "w") as fh:
+        with open(os.path.join(path, "metadata", "v1.metadata.json"), "w") as fh:
             _json.dump(meta, fh)
-        with open(os.path.join(tmp, "metadata", "version-hint.text"), "w") as fh:
+        with open(os.path.join(path, "metadata", "version-hint.text"), "w") as fh:
             fh.write("1")
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale)
-                    shutil.rmtree(stale, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _ICEBERG_TBL_CACHE[key] = path
-    return path
+
+    return _built("icebergtbl_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -864,9 +811,6 @@ def _ice_long(v: int) -> bytes:
     return _struct.pack("<q", v)
 
 
-_ICEBERG_PART_CACHE: dict[str, str] = {}
-
-
 def _iceberg_part_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once PARTITIONED external Iceberg table: one data file per
     o_orderstatus value ('F'/'O'/'P'), identity partition spec, one
@@ -877,24 +821,12 @@ def _iceberg_part_orders(spark: SparkSession, sf_dir: str) -> str:
     import json as _json
     import os
     import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
 
-    key = f"{sf_dir}"
-    if key in _ICEBERG_PART_CACHE:
-        return _ICEBERG_PART_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_icebergpart_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "metadata", "version-hint.text")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, "data"))
-        os.makedirs(os.path.join(tmp, "metadata"))
+    def build(path: str) -> None:
+        os.makedirs(os.path.join(path, "data"))
+        os.makedirs(os.path.join(path, "metadata"))
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -909,14 +841,14 @@ def _iceberg_part_orders(spark: SparkSession, sf_dir: str) -> str:
 
         def write_one(status: str) -> tuple[str, int]:
             rel = f"{status}.parquet"
-            part_dir = os.path.join(tmp, f".stage-{rel}")
+            part_dir = os.path.join(path, f".stage-{rel}")
             o.filter(F.col("o_orderstatus") == status).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(part_dir)
             part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(tmp, "data", rel))
+            os.replace(part, os.path.join(path, "data", rel))
             shutil.rmtree(part_dir, ignore_errors=True)
-            return rel, os.path.getsize(os.path.join(tmp, "data", rel))
+            return rel, os.path.getsize(os.path.join(path, "data", rel))
 
         entry_schema = iceberg_entry_schema([("o_orderstatus", "string")])
         manifests = []
@@ -941,7 +873,7 @@ def _iceberg_part_orders(spark: SparkSession, sf_dir: str) -> str:
             }
             blob = write_ocf(entry_schema, [entry])
             mname = f"m-{status}.avro"
-            with open(os.path.join(tmp, "metadata", mname), "wb") as fh:
+            with open(os.path.join(path, "metadata", mname), "wb") as fh:
                 fh.write(blob)
             manifests.append((status, f"{path}/metadata/{mname}", len(blob)))
 
@@ -972,7 +904,7 @@ def _iceberg_part_orders(spark: SparkSession, sf_dir: str) -> str:
             for status, mpath, mlen in manifests
         ]
         ml_blob = write_ocf(ICEBERG_MANIFEST_FILE_SCHEMA_SUMMARIES, ml_recs)
-        with open(os.path.join(tmp, "metadata", "snap-1.avro"), "wb") as fh:
+        with open(os.path.join(path, "metadata", "snap-1.avro"), "wb") as fh:
             fh.write(ml_blob)
         meta = {
             "format-version": 2,
@@ -1023,23 +955,12 @@ def _iceberg_part_orders(spark: SparkSession, sf_dir: str) -> str:
             ],
             "snapshot-log": [{"snapshot-id": 1, "timestamp-ms": 1000}],
         }
-        with open(os.path.join(tmp, "metadata", "v1.metadata.json"), "w") as fh:
+        with open(os.path.join(path, "metadata", "v1.metadata.json"), "w") as fh:
             _json.dump(meta, fh)
-        with open(os.path.join(tmp, "metadata", "version-hint.text"), "w") as fh:
+        with open(os.path.join(path, "metadata", "version-hint.text"), "w") as fh:
             fh.write("1")
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale)
-                    shutil.rmtree(stale, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _ICEBERG_PART_CACHE[key] = path
-    return path
+
+    return _built("icebergpart_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -1082,9 +1003,6 @@ def iceberg_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICEBERG_MOR_CACHE: dict[str, str] = {}
-
-
 def _iceberg_mor_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once merge-on-read external Iceberg table: one data file
     (all orders) plus one POSITION-DELETE file removing every row whose
@@ -1097,42 +1015,30 @@ def _iceberg_mor_orders(spark: SparkSession, sf_dir: str) -> str:
     import json as _json
     import os
     import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
 
-    key = f"{sf_dir}"
-    if key in _ICEBERG_MOR_CACHE:
-        return _ICEBERG_MOR_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_icebergmor_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "metadata", "version-hint.text")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, "data"))
-        os.makedirs(os.path.join(tmp, "metadata"))
+    def build(path: str) -> None:
+        os.makedirs(os.path.join(path, "data"))
+        os.makedirs(os.path.join(path, "metadata"))
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
 
         def install_one(df: DataFrame, rel: str) -> int:
-            part_dir = os.path.join(tmp, f".stage-{rel}")
+            part_dir = os.path.join(path, f".stage-{rel}")
             df.coalesce(1).write.mode("overwrite").parquet(part_dir)
             part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(tmp, "data", rel))
+            os.replace(part, os.path.join(path, "data", rel))
             shutil.rmtree(part_dir, ignore_errors=True)
-            return os.path.getsize(os.path.join(tmp, "data", rel))
+            return os.path.getsize(os.path.join(path, "data", rel))
 
         a_size = install_one(o, "a.parquet")
         a_final = f"{path}/data/a.parquet"
         # delete file: (file_path, pos) of rows with o_orderkey % 10 == 3,
         # positions read back via the scan's own row_index (executor-side)
         dels = (
-            spark.read.parquet(os.path.join(tmp, "data", "a.parquet"))
+            spark.read.parquet(os.path.join(path, "data", "a.parquet"))
             .select("o_orderkey", F.col("_metadata.row_index").alias("pos"))
             .filter(F.col("o_orderkey") % 10 == 3)
             .select(F.lit(a_final).alias("file_path"), "pos")
@@ -1170,7 +1076,7 @@ def _iceberg_mor_orders(spark: SparkSession, sf_dir: str) -> str:
 
         def write_manifest(name: str, entries: list[dict]) -> tuple[str, int]:
             blob = write_ocf(ICEBERG_MANIFEST_ENTRY_SCHEMA, entries)
-            with open(os.path.join(tmp, "metadata", name), "wb") as fh:
+            with open(os.path.join(path, "metadata", name), "wb") as fh:
                 fh.write(blob)
             return f"{path}/metadata/{name}", len(blob)
 
@@ -1198,7 +1104,7 @@ def _iceberg_mor_orders(spark: SparkSession, sf_dir: str) -> str:
             ICEBERG_MANIFEST_FILE_SCHEMA,
             [ml_rec(m_data, m_data_len, 0, 1), ml_rec(m_del, m_del_len, 1, 2)],
         )
-        with open(os.path.join(tmp, "metadata", "snap-2.avro"), "wb") as fh:
+        with open(os.path.join(path, "metadata", "snap-2.avro"), "wb") as fh:
             fh.write(ml_blob)
         meta = {
             "format-version": 2,
@@ -1237,23 +1143,12 @@ def _iceberg_mor_orders(spark: SparkSession, sf_dir: str) -> str:
             ],
             "snapshot-log": [{"snapshot-id": 2, "timestamp-ms": 2000}],
         }
-        with open(os.path.join(tmp, "metadata", "v1.metadata.json"), "w") as fh:
+        with open(os.path.join(path, "metadata", "v1.metadata.json"), "w") as fh:
             _json.dump(meta, fh)
-        with open(os.path.join(tmp, "metadata", "version-hint.text"), "w") as fh:
+        with open(os.path.join(path, "metadata", "version-hint.text"), "w") as fh:
             fh.write("1")
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale)
-                    shutil.rmtree(stale, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _ICEBERG_MOR_CACHE[key] = path
-    return path
+
+    return _built("icebergmor_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -1291,9 +1186,6 @@ def iceberg_mor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DELTA_CM_CACHE: dict[str, str] = {}
-
-
 def _delta_cm_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once external Delta table with ``columnMapping.mode=name``
     (reader protocol 2): data files carry PHYSICAL column names
@@ -1303,22 +1195,9 @@ def _delta_cm_orders(spark: SparkSession, sf_dir: str) -> str:
     import json as _json
     import os
     import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
-
-    key = f"{sf_dir}"
-    if key in _DELTA_CM_CACHE:
-        return _DELTA_CM_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_deltacm_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "_delta_log", "00000000000000000000.json")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, "_delta_log"))
+    def build(path: str) -> None:
+        os.makedirs(os.path.join(path, "_delta_log"))
         phys = {
             "o_orderkey": "col-6a1b2c3d",
             "o_orderstatus": "col-7e4f5a6b",
@@ -1329,12 +1208,12 @@ def _delta_cm_orders(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def write_one(df: DataFrame, relname: str) -> int:
-            part_dir = os.path.join(tmp, f".stage-{relname}")
+            part_dir = os.path.join(path, f".stage-{relname}")
             df.coalesce(1).write.mode("overwrite").parquet(part_dir)
             part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(tmp, relname))
+            os.replace(part, os.path.join(path, relname))
             shutil.rmtree(part_dir, ignore_errors=True)
-            return os.path.getsize(os.path.join(tmp, relname))
+            return os.path.getsize(os.path.join(path, relname))
 
         key2 = F.col(phys["o_orderkey"]) % 2
         sizes = {
@@ -1385,25 +1264,11 @@ def _delta_cm_orders(spark: SparkSession, sf_dir: str) -> str:
             }
             for rel in ("a.parquet", "b.parquet")
         ]
-        with open(os.path.join(tmp, "_delta_log", "00000000000000000000.json"), "w") as fh:
+        with open(os.path.join(path, "_delta_log", "00000000000000000000.json"), "w") as fh:
             for a in actions:
                 fh.write(_json.dumps(a) + "\n")
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale)
-                    shutil.rmtree(stale, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _DELTA_CM_CACHE[key] = path
-    return path
 
-
-_ICEBERG_EQDEL_CACHE: dict[str, str] = {}
+    return _built("deltacm_v1", sf_dir, ("orders",), build)
 
 
 def _iceberg_eqdel_orders(spark: SparkSession, sf_dir: str) -> str:
@@ -1419,36 +1284,24 @@ def _iceberg_eqdel_orders(spark: SparkSession, sf_dir: str) -> str:
     import json as _json
     import os
     import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
 
-    key = f"{sf_dir}"
-    if key in _ICEBERG_EQDEL_CACHE:
-        return _ICEBERG_EQDEL_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_icebergeq_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "metadata", "version-hint.text")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, "data"))
-        os.makedirs(os.path.join(tmp, "metadata"))
+    def build(path: str) -> None:
+        os.makedirs(os.path.join(path, "data"))
+        os.makedirs(os.path.join(path, "metadata"))
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
 
         def install_one(df: DataFrame, rel: str) -> tuple[int, int]:
-            part_dir = os.path.join(tmp, f".stage-{rel}")
+            part_dir = os.path.join(path, f".stage-{rel}")
             df.coalesce(1).write.mode("overwrite").parquet(part_dir)
             part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(tmp, "data", rel))
+            os.replace(part, os.path.join(path, "data", rel))
             shutil.rmtree(part_dir, ignore_errors=True)
-            n = spark.read.parquet(os.path.join(tmp, "data", rel)).count()
-            return os.path.getsize(os.path.join(tmp, "data", rel)), n
+            n = spark.read.parquet(os.path.join(path, "data", rel)).count()
+            return os.path.getsize(os.path.join(path, "data", rel)), n
 
         a_size, a_n = install_one(o, "a.parquet")
         d_size, d_n = install_one(
@@ -1483,7 +1336,7 @@ def _iceberg_eqdel_orders(spark: SparkSession, sf_dir: str) -> str:
 
         def write_manifest(name: str, entries: list[dict]) -> tuple[str, int]:
             blob = write_ocf(entry_schema, entries)
-            with open(os.path.join(tmp, "metadata", name), "wb") as fh:
+            with open(os.path.join(path, "metadata", name), "wb") as fh:
                 fh.write(blob)
             return f"{path}/metadata/{name}", len(blob)
 
@@ -1518,7 +1371,7 @@ def _iceberg_eqdel_orders(spark: SparkSession, sf_dir: str) -> str:
                 ml_rec(m_d, m_d_len, 1, 2),
             ],
         )
-        with open(os.path.join(tmp, "metadata", "snap-3.avro"), "wb") as fh:
+        with open(os.path.join(path, "metadata", "snap-3.avro"), "wb") as fh:
             fh.write(ml_blob)
         meta = {
             "format-version": 2,
@@ -1557,23 +1410,12 @@ def _iceberg_eqdel_orders(spark: SparkSession, sf_dir: str) -> str:
             ],
             "snapshot-log": [{"snapshot-id": 3, "timestamp-ms": 3000}],
         }
-        with open(os.path.join(tmp, "metadata", "v1.metadata.json"), "w") as fh:
+        with open(os.path.join(path, "metadata", "v1.metadata.json"), "w") as fh:
             _json.dump(meta, fh)
-        with open(os.path.join(tmp, "metadata", "version-hint.text"), "w") as fh:
+        with open(os.path.join(path, "metadata", "version-hint.text"), "w") as fh:
             fh.write("1")
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale)
-                    shutil.rmtree(stale, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _ICEBERG_EQDEL_CACHE[key] = path
-    return path
+
+    return _built("icebergeq_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -1616,9 +1458,6 @@ def iceberg_eq_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DELTA_DV_CACHE: dict[str, str] = {}
-
-
 def _delta_dv_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once external Delta table with a file-based DELETION VECTOR
     (reader protocol 3 + deletionVectors — the default for recent Delta
@@ -1634,38 +1473,26 @@ def _delta_dv_orders(spark: SparkSession, sf_dir: str) -> str:
     import os
     import shutil
     import struct as _struct
-    import tempfile
     import uuid as _uuid
     import zlib
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.roaring import encode_rbm_array
 
-    key = f"{sf_dir}"
-    if key in _DELTA_DV_CACHE:
-        return _DELTA_DV_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_deltadv_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "_delta_log", "00000000000000000000.json")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, "_delta_log"))
+    def build(path: str) -> None:
+        os.makedirs(os.path.join(path, "_delta_log"))
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-        part_dir = os.path.join(tmp, ".stage-a")
+        part_dir = os.path.join(path, ".stage-a")
         o.coalesce(1).write.mode("overwrite").parquet(part_dir)
         part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        os.replace(part, os.path.join(tmp, "a.parquet"))
+        os.replace(part, os.path.join(path, "a.parquet"))
         shutil.rmtree(part_dir, ignore_errors=True)
         # deleted positions via the scan's own row_index (planning-sized
         # collect: one int per deleted fixture row)
         positions = sorted(
             r["pos"]
-            for r in spark.read.parquet(os.path.join(tmp, "a.parquet"))
+            for r in spark.read.parquet(os.path.join(path, "a.parquet"))
             .select("o_orderkey", F.col("_metadata.row_index").alias("pos"))
             .filter(F.col("o_orderkey") % 10 == 3)
             .collect()
@@ -1678,7 +1505,7 @@ def _delta_dv_orders(spark: SparkSession, sf_dir: str) -> str:
             + payload
             + _struct.pack(">I", zlib.crc32(payload) & 0xFFFFFFFF)
         )
-        with open(os.path.join(tmp, f"deletion_vector_{u}.bin"), "wb") as fh:
+        with open(os.path.join(path, f"deletion_vector_{u}.bin"), "wb") as fh:
             fh.write(blob)
         actions = [
             {
@@ -1702,7 +1529,7 @@ def _delta_dv_orders(spark: SparkSession, sf_dir: str) -> str:
                 "add": {
                     "path": "a.parquet",
                     "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(tmp, "a.parquet")),
+                    "size": os.path.getsize(os.path.join(path, "a.parquet")),
                     "modificationTime": 0,
                     "dataChange": True,
                     "deletionVector": {
@@ -1715,22 +1542,11 @@ def _delta_dv_orders(spark: SparkSession, sf_dir: str) -> str:
                 }
             },
         ]
-        with open(os.path.join(tmp, "_delta_log", "00000000000000000000.json"), "w") as fh:
+        with open(os.path.join(path, "_delta_log", "00000000000000000000.json"), "w") as fh:
             for a in actions:
                 fh.write(_json.dumps(a) + "\n")
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale)
-                    shutil.rmtree(stale, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _DELTA_DV_CACHE[key] = path
-    return path
+
+    return _built("deltadv_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -1805,8 +1621,6 @@ def delta_column_mapping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # external Hudi (COPY_ON_WRITE) — round 13 completes the reader triad
 # ---------------------------------------------------------------------------
 
-_HUDI_TBL_CACHE: dict[str, str] = {}
-
 
 def _hudi_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once external Hudi COW table derived from orders. Timeline:
@@ -1822,35 +1636,22 @@ def _hudi_orders(spark: SparkSession, sf_dir: str) -> str:
     import json as _json
     import os
     import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
-
-    key = f"{sf_dir}"
-    if key in _HUDI_TBL_CACHE:
-        return _HUDI_TBL_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_huditbl_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    t1, t2 = "20260101000000000", "20260102000000000"
-    done = os.path.join(path, ".hoodie", f"{t2}.commit")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, ".hoodie"))
+    def build(path: str) -> None:
+        t1, t2 = "20260101000000000", "20260102000000000"
+        os.makedirs(os.path.join(path, ".hoodie"))
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
 
         def write_slice(df: DataFrame, file_id: str, instant: str) -> str:
             rel = f"{file_id}_0-1-0_{instant}.parquet"
-            stage = os.path.join(tmp, f".stage-{file_id}-{instant}")
+            stage = os.path.join(path, f".stage-{file_id}-{instant}")
             df.select(
                 F.lit(instant).alias("_hoodie_commit_time"), "*"
             ).coalesce(1).write.mode("overwrite").parquet(stage)
             part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(tmp, rel))
+            os.replace(part, os.path.join(path, rel))
             shutil.rmtree(stage, ignore_errors=True)
             return rel
 
@@ -1870,30 +1671,19 @@ def _hudi_orders(spark: SparkSession, sf_dir: str) -> str:
                 },
                 "operationType": "UPSERT",
             }
-            with open(os.path.join(tmp, ".hoodie", f"{instant}.commit"), "w") as fh:
+            with open(os.path.join(path, ".hoodie", f"{instant}.commit"), "w") as fh:
                 _json.dump(meta, fh)
 
         commit(t1, {"": [("f1", f1_t1), ("f2", f2_t1)]})
         commit(t2, {"": [("f1", f1_t2)]})
-        with open(os.path.join(tmp, ".hoodie", "hoodie.properties"), "w") as fh:
+        with open(os.path.join(path, ".hoodie", "hoodie.properties"), "w") as fh:
             fh.write(
                 "hoodie.table.name=cdl_orders\n"
                 "hoodie.table.type=COPY_ON_WRITE\n"
                 "hoodie.table.version=6\n"
             )
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale_dir = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale_dir)
-                    shutil.rmtree(stale_dir, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _HUDI_TBL_CACHE[key] = path
-    return path
+
+    return _built("huditbl_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -1970,9 +1760,6 @@ def hudi_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # external Delta table WRITE path (sources/delta_write.py)
 # ---------------------------------------------------------------------------
 
-#: session-scoped handle to the build-once WRITTEN Delta fixture
-_DELTA_WRITE_CACHE: dict[str, str] = {}
-
 
 def _delta_written_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Delta table produced entirely by this repo's OWN
@@ -1985,57 +1772,31 @@ def _delta_written_orders(spark: SparkSession, sf_dir: str) -> str:
     so a latest read replays checkpoint + one commit (the reader's
     pointer fast path), and ``version=1`` resolves THROUGH the
     checkpoint."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.delta_write import (
         checkpoint_delta,
         write_delta,
     )
 
-    key = f"{sf_dir}"
-    if key in _DELTA_WRITE_CACHE:
-        return _DELTA_WRITE_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_deltawrite_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "_delta_log", "00000000000000000002.json")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
         )
         key3 = F.col("o_orderkey") % 3
         write_delta(
-            o.filter(key3 == 0), tmp, mode="error",
+            o.filter(key3 == 0), path, mode="error",
             partition_by=["o_orderstatus"],
         )
         write_delta(
-            o.filter(key3 == 1), tmp, mode="append",
+            o.filter(key3 == 1), path, mode="append",
             partition_by=["o_orderstatus"],
         )
-        checkpoint_delta(tmp)
+        checkpoint_delta(path)
         write_delta(
-            o.filter(key3 == 2), tmp, mode="append",
+            o.filter(key3 == 2), path, mode="append",
             partition_by=["o_orderstatus"],
         )
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale)
-                    shutil.rmtree(stale, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _DELTA_WRITE_CACHE[key] = path
-    return path
+
+    return _built("deltawrite_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -2113,9 +1874,6 @@ def delta_write_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # external Iceberg table WRITE path (sources/iceberg_write.py)
 # ---------------------------------------------------------------------------
 
-#: session-scoped handle to the build-once WRITTEN Iceberg fixture
-_ICEBERG_WRITE_CACHE: dict[str, str] = {}
-
 
 def _iceberg_written_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Iceberg v2 table produced entirely by this repo's OWN
@@ -2126,32 +1884,13 @@ def _iceberg_written_orders(spark: SparkSession, sf_dir: str) -> str:
     appends %3=1 (manifest-list carry-forward), snapshot 3 appends %3=2
     — three snapshots, three metadata versions, snapshot-log timestamps
     for time travel."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.iceberg_write import write_iceberg
 
-    key = f"{sf_dir}"
-    if key in _ICEBERG_WRITE_CACHE:
-        return _ICEBERG_WRITE_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_icebergwrite_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "metadata", "v3.metadata.json")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
         )
         key3 = F.col("o_orderkey") % 3
-        # the writer embeds ABSOLUTE file paths in manifests (spec: file
-        # URIs), so the table must be built at its FINAL path — commit 3
-        # (the `done` marker) lands last, and a reader that races the
-        # build resolves an older-but-complete snapshot
         write_iceberg(
             o.filter(key3 == 0), path, mode="append",
             partition_by=["o_orderstatus"],
@@ -2164,8 +1903,8 @@ def _iceberg_written_orders(spark: SparkSession, sf_dir: str) -> str:
             o.filter(key3 == 2), path, mode="append",
             partition_by=["o_orderstatus"],
         )
-    _ICEBERG_WRITE_CACHE[key] = path
-    return path
+
+    return _built("icebergwrite_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -2242,9 +1981,6 @@ def iceberg_write_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # external Hudi MERGE_ON_READ read path (sources/hudi.py::read_hudi_mor)
 # ---------------------------------------------------------------------------
 
-#: session-scoped handle to the build-once MoR fixture
-_HUDI_MOR_CACHE: dict[str, str] = {}
-
 
 def _hudi_mor_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once external Hudi MERGE_ON_READ table: instant t1 commits
@@ -2261,38 +1997,26 @@ def _hudi_mor_orders(spark: SparkSession, sf_dir: str) -> str:
     import json as _json
     import os
     import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.hudi import (
         encode_avro_data_block,
         write_log_blocks,
     )
 
-    key = f"{sf_dir}"
-    if key in _HUDI_MOR_CACHE:
-        return _HUDI_MOR_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_hudimor_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    t1, t2 = "20260101000000000", "20260102000000000"
-    done = os.path.join(path, ".hoodie", f"{t2}.deltacommit")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, ".hoodie"))
+    def build(path: str) -> None:
+        t1, t2 = "20260101000000000", "20260102000000000"
+        os.makedirs(os.path.join(path, ".hoodie"))
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
         base_rel = f"f1_0-1-0_{t1}.parquet"
-        stage = os.path.join(tmp, ".stage-base")
+        stage = os.path.join(path, ".stage-base")
         o.select(
             F.col("o_orderkey").cast("string").alias("_hoodie_record_key"),
             "*",
         ).coalesce(1).write.mode("overwrite").parquet(stage)
         part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        os.replace(part, os.path.join(tmp, base_rel))
+        os.replace(part, os.path.join(path, base_rel))
         shutil.rmtree(stage, ignore_errors=True)
 
         avro_schema = {
@@ -2330,7 +2054,7 @@ def _hudi_mor_orders(spark: SparkSession, sf_dir: str) -> str:
             for r in changed
         ]
         log_rel = f".f1_{t1}.log.1_0-1-0"
-        with open(os.path.join(tmp, log_rel), "wb") as fh:
+        with open(os.path.join(path, log_rel), "wb") as fh:
             fh.write(
                 write_log_blocks(
                     [encode_avro_data_block(records, avro_schema, t2)]
@@ -2345,31 +2069,20 @@ def _hudi_mor_orders(spark: SparkSession, sf_dir: str) -> str:
                 "operationType": "UPSERT",
             }
             with open(
-                os.path.join(tmp, ".hoodie", f"{instant}.{action}"), "w"
+                os.path.join(path, ".hoodie", f"{instant}.{action}"), "w"
             ) as fh:
                 _json.dump(meta, fh)
 
         commit(t1, "commit", base_rel)
         commit(t2, "deltacommit", log_rel)
-        with open(os.path.join(tmp, ".hoodie", "hoodie.properties"), "w") as fh:
+        with open(os.path.join(path, ".hoodie", "hoodie.properties"), "w") as fh:
             fh.write(
                 "hoodie.table.name=cdl_orders_mor\n"
                 "hoodie.table.type=MERGE_ON_READ\n"
                 "hoodie.table.version=6\n"
             )
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale_dir = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale_dir)
-                    shutil.rmtree(stale_dir, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _HUDI_MOR_CACHE[key] = path
-    return path
+
+    return _built("hudimor_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -2440,10 +2153,6 @@ def hudi_mor_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once LOGS-ONLY MoR fixture
-_HUDI_LOGSONLY_CACHE: dict[str, str] = {}
-
-
 def _hudi_logsonly_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once LOGS-ONLY Hudi MERGE_ON_READ table — a file group with
     NO base parquet (the 'inserts routed to logs before any base file'
@@ -2457,28 +2166,15 @@ def _hudi_logsonly_orders(spark: SparkSession, sf_dir: str) -> str:
     filtering all work without a base file."""
     import json as _json
     import os
-    import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.hudi import (
         encode_avro_data_block,
         write_log_blocks,
     )
 
-    key = f"{sf_dir}"
-    if key in _HUDI_LOGSONLY_CACHE:
-        return _HUDI_LOGSONLY_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_hudilogsonly_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    t1, t2 = "20260101000000000", "20260102000000000"
-    done = os.path.join(path, ".hoodie", f"{t2}.deltacommit")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, ".hoodie"))
+    def build(path: str) -> None:
+        t1, t2 = "20260101000000000", "20260102000000000"
+        os.makedirs(os.path.join(path, ".hoodie"))
         avro_schema = {
             "type": "record",
             "name": "orders_logsonly",
@@ -2522,7 +2218,7 @@ def _hudi_logsonly_orders(spark: SparkSession, sf_dir: str) -> str:
             (2, t2, changes),
         ):
             log_rel = f".f7_{t1}.log.{ver}_0-1-0"
-            with open(os.path.join(tmp, log_rel), "wb") as fh:
+            with open(os.path.join(path, log_rel), "wb") as fh:
                 fh.write(
                     write_log_blocks(
                         [encode_avro_data_block(records, avro_schema, instant)]
@@ -2535,28 +2231,17 @@ def _hudi_logsonly_orders(spark: SparkSession, sf_dir: str) -> str:
                 "operationType": "UPSERT",
             }
             with open(
-                os.path.join(tmp, ".hoodie", f"{instant}.deltacommit"), "w"
+                os.path.join(path, ".hoodie", f"{instant}.deltacommit"), "w"
             ) as fh:
                 _json.dump(meta, fh)
-        with open(os.path.join(tmp, ".hoodie", "hoodie.properties"), "w") as fh:
+        with open(os.path.join(path, ".hoodie", "hoodie.properties"), "w") as fh:
             fh.write(
                 "hoodie.table.name=cdl_orders_logsonly\n"
                 "hoodie.table.type=MERGE_ON_READ\n"
                 "hoodie.table.version=6\n"
             )
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale_dir = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale_dir)
-                    shutil.rmtree(stale_dir, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _HUDI_LOGSONLY_CACHE[key] = path
-    return path
+
+    return _built("hudilogsonly_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -2593,10 +2278,6 @@ def hudi_logsonly_mor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once MoR-DML-written Hudi fixture
-_HUDI_MOR_DML_CACHE: dict[str, str] = {}
-
-
 def _hudi_mor_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once MERGE_ON_READ Hudi table produced entirely by this
     repo's OWN writers: instant 1 ``write_hudi(table_type=
@@ -2607,27 +2288,13 @@ def _hudi_mor_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     half of the HoodieLogFormat story whose read half
     (``read_hudi_mor``) the hudi_mor_read fixture covers with
     hand-built bytes."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.hudi import (
         delete_from_hudi_mor,
         upsert_hudi_mor,
         write_hudi,
     )
 
-    key = f"{sf_dir}"
-    if key in _HUDI_MOR_DML_CACHE:
-        return _HUDI_MOR_DML_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_hudimordml_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, ".hoodie", "20260101000000002.deltacommit")
-    if not os.path.isfile(done):
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey"), F.col("o_orderstatus"), F.col("o_totalprice")
         )
@@ -2639,8 +2306,8 @@ def _hudi_mor_dml_orders(spark: SparkSession, sf_dir: str) -> str:
         )
         upsert_hudi_mor(spark, path, upd, record_key="o_orderkey")
         delete_from_hudi_mor(spark, path, "o_orderkey % 10 = 5")
-    _HUDI_MOR_DML_CACHE[key] = path
-    return path
+
+    return _built("hudimordml_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -2682,10 +2349,6 @@ def hudi_mor_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once DML-history Delta fixture
-_DELTA_DML_CACHE: dict[str, str] = {}
-
-
 def _delta_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Delta table whose HISTORY is v0 create (all orders,
     hive-partitioned by o_orderstatus) → v1 ``delete_from_delta``
@@ -2694,40 +2357,24 @@ def _delta_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     (``sources/delta_write.py::_rewrite_matching_files``), so the latest
     snapshot is wrong unless file-scoped rewrite, remove/add
     reconciliation AND the predicate scoping all work."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.delta_write import (
         delete_from_delta,
         update_delta,
         write_delta,
     )
 
-    key = f"{sf_dir}"
-    if key in _DELTA_DML_CACHE:
-        return _DELTA_DML_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_deltadml_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "_delta_log", "00000000000000000002.json")
-    if not os.path.isfile(done):
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-        # built at the final path: the DML history IS the fixture, and
-        # the `done` marker (commit 2) lands last
         write_delta(o, path, mode="error", partition_by=["o_orderstatus"])
         delete_from_delta(spark, path, "o_orderkey % 10 = 5")
         update_delta(
             spark, path, "o_orderkey % 10 = 0",
             {"o_totalprice": "-o_totalprice"},
         )
-    _DELTA_DML_CACHE[key] = path
-    return path
+
+    return _built("deltadml_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -2766,10 +2413,6 @@ def delta_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once DV-DML-history Delta fixture
-_DELTA_DV_DML_CACHE: dict[str, str] = {}
-
-
 def _delta_dv_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Delta table whose DML history runs through DELETION
     VECTORS (merge-on-read) instead of file rewrites: v0 create (all
@@ -2782,27 +2425,13 @@ def _delta_dv_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     No original data file is ever rewritten; the snapshot is wrong
     unless DV encode (RoaringBitmapArray sidecar), (path, dvId) action
     reconciliation, DV union, and the read-side anti-join all agree."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.delta_write import (
         delete_from_delta,
         update_delta,
         write_delta,
     )
 
-    key = f"{sf_dir}"
-    if key in _DELTA_DV_DML_CACHE:
-        return _DELTA_DV_DML_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_deltadvdml_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "_delta_log", "00000000000000000002.json")
-    if not os.path.isfile(done):
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -2812,8 +2441,8 @@ def _delta_dv_dml_orders(spark: SparkSession, sf_dir: str) -> str:
             spark, path, "o_orderkey % 10 = 0",
             {"o_totalprice": "-o_totalprice"}, mode="dv",
         )
-    _DELTA_DV_DML_CACHE[key] = path
-    return path
+
+    return _built("deltadvdml_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -2856,10 +2485,6 @@ def delta_dv_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once DML-history Iceberg fixture
-_ICEBERG_DML_CACHE: dict[str, str] = {}
-
-
 def _iceberg_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Iceberg v2 table whose history is snapshot 1 create
     (all orders, identity-partitioned by o_orderstatus) → snapshot 2
@@ -2867,27 +2492,13 @@ def _iceberg_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     (%10=0: price negated) — CoW DML through manifest rewrite (hit
     entries status=DELETED, survivors EXISTING with original sequence
     numbers), mirroring the Delta DML fixture."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.iceberg_write import (
         delete_from_iceberg,
         update_iceberg,
         write_iceberg,
     )
 
-    key = f"{sf_dir}"
-    if key in _ICEBERG_DML_CACHE:
-        return _ICEBERG_DML_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_icedml_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "metadata", "v3.metadata.json")
-    if not os.path.isfile(done):
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -2897,8 +2508,8 @@ def _iceberg_dml_orders(spark: SparkSession, sf_dir: str) -> str:
             spark, path, "o_orderkey % 10 = 0",
             {"o_totalprice": "-o_totalprice"},
         )
-    _ICEBERG_DML_CACHE[key] = path
-    return path
+
+    return _built("icedml_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -2937,10 +2548,6 @@ def iceberg_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once MoR-DML-history Iceberg fixture
-_ICEBERG_MOR_DML_CACHE: dict[str, str] = {}
-
-
 def _iceberg_mor_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Iceberg v2 table whose DML history runs through
     MERGE-ON-READ position deletes instead of manifest-rewrite CoW:
@@ -2953,27 +2560,13 @@ def _iceberg_mor_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     land as new data files). No base data file is ever rewritten; the
     snapshot is wrong unless the delete-file field ids, manifest-list
     sequence numbers, and the reader's position anti-join all agree."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.iceberg_write import (
         delete_from_iceberg,
         update_iceberg,
         write_iceberg,
     )
 
-    key = f"{sf_dir}"
-    if key in _ICEBERG_MOR_DML_CACHE:
-        return _ICEBERG_MOR_DML_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_icemordml_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "metadata", "v3.metadata.json")
-    if not os.path.isfile(done):
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -2983,8 +2576,8 @@ def _iceberg_mor_dml_orders(spark: SparkSession, sf_dir: str) -> str:
             spark, path, "o_orderkey % 10 = 0",
             {"o_totalprice": "-o_totalprice"}, mode="mor",
         )
-    _ICEBERG_MOR_DML_CACHE[key] = path
-    return path
+
+    return _built("icemordml_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -3026,36 +2619,18 @@ def iceberg_mor_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once MERGE-history Delta fixture
-_DELTA_MERGE_CACHE: dict[str, str] = {}
-
-
 def _delta_merge_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Delta table whose history is v0 create (all orders) →
     v1 MERGE: source = the %7=0 slice with DOUBLED price plus the same
     keys shifted past the max key (guaranteed-new inserts with price
     +0.5) — one commit carrying matched updates AND inserts through the
     CoW merge engine."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.delta_write import (
         merge_into_delta,
         write_delta,
     )
 
-    key = f"{sf_dir}"
-    if key in _DELTA_MERGE_CACHE:
-        return _DELTA_MERGE_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_deltamerge_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "_delta_log", "00000000000000000001.json")
-    if not os.path.isfile(done):
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3081,8 +2656,8 @@ def _delta_merge_orders(spark: SparkSession, sf_dir: str) -> str:
             spark, path, source, on=["o_orderkey"],
             when_matched_update={"o_totalprice": "src.o_totalprice"},
         )
-    _DELTA_MERGE_CACHE[key] = path
-    return path
+
+    return _built("deltamerge_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -3131,10 +2706,6 @@ def delta_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once WRITTEN Hudi fixture
-_HUDI_WRITE_CACHE: dict[str, str] = {}
-
-
 def _hudi_written_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Hudi COW table produced by this repo's OWN writer
     (``sources/hudi.py::write_hudi``): t1 bulk-inserts all orders
@@ -3142,23 +2713,9 @@ def _hudi_written_orders(spark: SparkSession, sf_dir: str) -> str:
     t2 COW-UPSERTS the %10=0 slice with negated prices — the hit file
     groups rewrite as new slices of the SAME fileId, so the latest read
     is wrong unless newest-slice-per-group resolution picks them up."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.hudi import write_hudi
 
-    key = f"{sf_dir}"
-    if key in _HUDI_WRITE_CACHE:
-        return _HUDI_WRITE_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_hudiwrite_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, ".hoodie", "20260101000000001.commit")
-    if not os.path.isfile(done):
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3173,8 +2730,8 @@ def _hudi_written_orders(spark: SparkSession, sf_dir: str) -> str:
             upd, path, record_key="o_orderkey", mode="upsert",
             partition_by=["o_orderstatus"],
         )
-    _HUDI_WRITE_CACHE[key] = path
-    return path
+
+    return _built("hudiwrite_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -3332,10 +2889,6 @@ def hudi_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once eq-delete-written Iceberg fixture
-_ICEBERG_EQ_DML_CACHE: dict[str, str] = {}
-
-
 def _iceberg_eq_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Iceberg table whose history exercises the EQUALITY-
     DELETE WRITE path end to end: snapshot 1 creates (all orders),
@@ -3345,26 +2898,12 @@ def _iceberg_eq_dml_orders(spark: SparkSession, sf_dir: str) -> str:
     prices. The final read is wrong unless the reader scopes the
     equality delete to STRICTLY-LOWER sequence numbers (re-inserted
     rows survive) — the CDC upsert pattern."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.iceberg_write import (
         equality_delete_iceberg,
         write_iceberg,
     )
 
-    key = f"{sf_dir}"
-    if key in _ICEBERG_EQ_DML_CACHE:
-        return _ICEBERG_EQ_DML_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_iceeqdml_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "metadata", "v3.metadata.json")
-    if not os.path.isfile(done):
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3378,8 +2917,8 @@ def _iceberg_eq_dml_orders(spark: SparkSession, sf_dir: str) -> str:
             path,
             mode="append",
         )
-    _ICEBERG_EQ_DML_CACHE[key] = path
-    return path
+
+    return _built("iceeqdml_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -3420,10 +2959,6 @@ def iceberg_eq_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once Z-ORDERED Delta fixture
-_DELTA_ZORDER_CACHE: dict[str, str] = {}
-
-
 def _delta_zorder_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Delta table laid out by OPTIMIZE ZORDER BY
     (o_custkey, o_totalprice): v0 writes all orders, v1 is
@@ -3431,26 +2966,12 @@ def _delta_zorder_orders(spark: SparkSession, sf_dir: str) -> str:
     rewrite (``sources/zorder.py``), so each output file covers a small
     (custkey × price) rectangle and the add-action stats give tight
     per-file ranges on BOTH columns."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.delta_write import (
         compact_delta,
         write_delta,
     )
 
-    key = f"{sf_dir}"
-    if key in _DELTA_ZORDER_CACHE:
-        return _DELTA_ZORDER_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_deltazorder_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "_delta_log", "00000000000000000001.json")
-    if not os.path.isfile(done):
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
         )
@@ -3461,8 +2982,8 @@ def _delta_zorder_orders(spark: SparkSession, sf_dir: str) -> str:
             target_file_rows=max(1, n // 16),
             zorder_by=["o_custkey", "o_totalprice"],
         )
-    _DELTA_ZORDER_CACHE[key] = path
-    return path
+
+    return _built("deltazorder_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -3507,10 +3028,6 @@ def delta_zorder_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once lake-sync fixture pair
-_LAKESYNC_CACHE: dict[str, str] = {}
-
-
 def _lakesync_native_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once NATIVE table populated exclusively by the exactly-once
     lake sync (``streaming/lakesync.py``): a Delta source receives
@@ -3520,26 +3037,12 @@ def _lakesync_native_orders(spark: SparkSession, sf_dir: str) -> str:
     native table equals orders only if the change feed, the ledger
     high-water mark, and the atomic append all compose."""
     import os
-    import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.delta_write import write_delta
     from connected_data_lake_spark.streaming.lakesync import sync_from_delta
 
-    key = f"{sf_dir}"
-    if key in _LAKESYNC_CACHE:
-        return _LAKESYNC_CACHE[key]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_lakesync_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    src = os.path.join(base, "delta_src")
-    dst = os.path.join(base, "native")
-    done = os.path.join(base, "_done")
-    if not os.path.isfile(done):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
+        src, dst = os.path.join(base, "delta_src"), os.path.join(base, "native")
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3552,10 +3055,8 @@ def _lakesync_native_orders(spark: SparkSession, sf_dir: str) -> str:
             raise RuntimeError(
                 f"lake-sync fixture broke exactly-once: {v1} {v2} {v3}"
             )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    _LAKESYNC_CACHE[key] = dst
-    return dst
+
+    return os.path.join(_built("lakesync_v1", sf_dir, ("orders",), build), "native")
 
 
 @query(
@@ -3592,10 +3093,6 @@ def lakesync_delta_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once CDF-enabled Delta fixture
-_DELTA_CDC_CACHE: dict[str, str] = {}
-
-
 def _delta_cdc_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Delta table with ``delta.enableChangeDataFeed=true``
     whose DML history writes REAL ``cdc`` actions + ``_change_data/``
@@ -3605,27 +3102,13 @@ def _delta_cdc_orders(spark: SparkSession, sf_dir: str) -> str:
     un-derivable and gates) → v2 deletion-vector DELETE (%10=5, cdc
     recorded alongside the DV mask). This is the table shape a real
     delta-spark CDF user migrates in with."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.delta_write import (
         delete_from_delta,
         update_delta,
         write_delta,
     )
 
-    key = f"{sf_dir}"
-    if key in _DELTA_CDC_CACHE:
-        return _DELTA_CDC_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_deltacdc_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "_delta_log", "00000000000000000002.json")
-    if not os.path.isfile(done):
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3641,8 +3124,8 @@ def _delta_cdc_orders(spark: SparkSession, sf_dir: str) -> str:
             {"o_totalprice": "-o_totalprice"},
         )
         delete_from_delta(spark, path, "o_orderkey % 10 = 5", mode="dv")
-    _DELTA_CDC_CACHE[key] = path
-    return path
+
+    return _built("deltacdc_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -3694,10 +3177,6 @@ def delta_cdf_files_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once v3 deletion-vector fixture
-_ICEBERG_V3_DV_CACHE: dict[str, str] = {}
-
-
 def _iceberg_v3_dv_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once FORMAT-VERSION 3 Iceberg table whose deletes live in a
     PUFFIN deletion vector (spec "Deletion vectors" + Puffin
@@ -3713,39 +3192,27 @@ def _iceberg_v3_dv_orders(spark: SparkSession, sf_dir: str) -> str:
     import os
     import shutil
     import struct as _struct
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
     from connected_data_lake_spark.sources.roaring import encode_iceberg_dv_blob
 
-    key = f"{sf_dir}"
-    if key in _ICEBERG_V3_DV_CACHE:
-        return _ICEBERG_V3_DV_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_icebergv3dv_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "metadata", "version-hint.text")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, "data"))
-        os.makedirs(os.path.join(tmp, "metadata"))
+    def build(path: str) -> None:
+        os.makedirs(os.path.join(path, "data"))
+        os.makedirs(os.path.join(path, "metadata"))
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-        part_dir = os.path.join(tmp, ".stage-a")
+        part_dir = os.path.join(path, ".stage-a")
         o.coalesce(1).write.mode("overwrite").parquet(part_dir)
         part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        os.replace(part, os.path.join(tmp, "data", "a.parquet"))
+        os.replace(part, os.path.join(path, "data", "a.parquet"))
         shutil.rmtree(part_dir, ignore_errors=True)
-        a_size = os.path.getsize(os.path.join(tmp, "data", "a.parquet"))
+        a_size = os.path.getsize(os.path.join(path, "data", "a.parquet"))
         a_final = f"{path}/data/a.parquet"
         # masked positions via the scan's own row_index (fixture-sized)
         positions = sorted(
             r["pos"]
-            for r in spark.read.parquet(os.path.join(tmp, "data", "a.parquet"))
+            for r in spark.read.parquet(os.path.join(path, "data", "a.parquet"))
             .select("o_orderkey", F.col("_metadata.row_index").alias("pos"))
             .filter(F.col("o_orderkey") % 10 == 4)
             .collect()
@@ -3780,7 +3247,7 @@ def _iceberg_v3_dv_orders(spark: SparkSession, sf_dir: str) -> str:
             + b"\x00\x00\x00\x00"
             + b"PFA1"
         )
-        with open(os.path.join(tmp, "data", "dv.puffin"), "wb") as fh:
+        with open(os.path.join(path, "data", "dv.puffin"), "wb") as fh:
             fh.write(puffin)
         dv_final = f"{path}/data/dv.puffin"
 
@@ -3819,10 +3286,10 @@ def _iceberg_v3_dv_orders(spark: SparkSession, sf_dir: str) -> str:
         }
 
         m_data = write_ocf(iceberg_entry_schema(None), [data_entry])
-        with open(os.path.join(tmp, "metadata", "m-data.avro"), "wb") as fh:
+        with open(os.path.join(path, "metadata", "m-data.avro"), "wb") as fh:
             fh.write(m_data)
         m_dv = write_ocf(iceberg_entry_schema(None, with_dv=True), [dv_entry])
-        with open(os.path.join(tmp, "metadata", "m-dv.avro"), "wb") as fh:
+        with open(os.path.join(path, "metadata", "m-dv.avro"), "wb") as fh:
             fh.write(m_dv)
 
         def ml_rec(name: str, mlen: int, content: int, snap: int) -> dict:
@@ -3849,7 +3316,7 @@ def _iceberg_v3_dv_orders(spark: SparkSession, sf_dir: str) -> str:
                 ml_rec("m-dv.avro", len(m_dv), 1, 2),
             ],
         )
-        with open(os.path.join(tmp, "metadata", "snap-2.avro"), "wb") as fh:
+        with open(os.path.join(path, "metadata", "snap-2.avro"), "wb") as fh:
             fh.write(ml_blob)
         meta = {
             "format-version": 3,
@@ -3890,27 +3357,12 @@ def _iceberg_v3_dv_orders(spark: SparkSession, sf_dir: str) -> str:
             ],
             "snapshot-log": [{"snapshot-id": 2, "timestamp-ms": 2000}],
         }
-        with open(os.path.join(tmp, "metadata", "v1.metadata.json"), "w") as fh:
+        with open(os.path.join(path, "metadata", "v1.metadata.json"), "w") as fh:
             _json.dump(meta, fh)
-        with open(os.path.join(tmp, "metadata", "version-hint.text"), "w") as fh:
+        with open(os.path.join(path, "metadata", "version-hint.text"), "w") as fh:
             fh.write("1")
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale)
-                    shutil.rmtree(stale, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _ICEBERG_V3_DV_CACHE[key] = path
-    return path
 
-
-#: session-scoped handle to the build-once v3 COLUMN-DEFAULTS fixture
-_ICEBERG_V3_DEFAULTS_CACHE: dict[str, str] = {}
+    return _built("icebergv3dv_v1", sf_dir, ("orders",), build)
 
 
 def _iceberg_v3_defaults_orders(spark: SparkSession, sf_dir: str) -> str:
@@ -3925,24 +3377,12 @@ def _iceberg_v3_defaults_orders(spark: SparkSession, sf_dir: str) -> str:
     import json as _json
     import os
     import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
 
-    key = f"{sf_dir}"
-    if key in _ICEBERG_V3_DEFAULTS_CACHE:
-        return _ICEBERG_V3_DEFAULTS_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_icebergv3def_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, "metadata", "version-hint.text")
-    if not os.path.isfile(done):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(os.path.join(tmp, "data"))
-        os.makedirs(os.path.join(tmp, "metadata"))
+    def build(path: str) -> None:
+        os.makedirs(os.path.join(path, "data"))
+        os.makedirs(os.path.join(path, "metadata"))
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3956,10 +3396,10 @@ def _iceberg_v3_defaults_orders(spark: SparkSession, sf_dir: str) -> str:
                 ),
             ),
         ):
-            stage = os.path.join(tmp, f".stage-{name}")
+            stage = os.path.join(path, f".stage-{name}")
             df.coalesce(1).write.mode("overwrite").parquet(stage)
             part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(tmp, "data", f"{name}.parquet"))
+            os.replace(part, os.path.join(path, "data", f"{name}.parquet"))
             shutil.rmtree(stage, ignore_errors=True)
             entries.append(
                 {
@@ -3974,13 +3414,13 @@ def _iceberg_v3_defaults_orders(spark: SparkSession, sf_dir: str) -> str:
                         "partition": {},
                         "record_count": 1,
                         "file_size_in_bytes": os.path.getsize(
-                            os.path.join(tmp, "data", f"{name}.parquet")
+                            os.path.join(path, "data", f"{name}.parquet")
                         ),
                     },
                 }
             )
         m_blob = write_ocf(iceberg_entry_schema(None), entries)
-        with open(os.path.join(tmp, "metadata", "m-data.avro"), "wb") as fh:
+        with open(os.path.join(path, "metadata", "m-data.avro"), "wb") as fh:
             fh.write(m_blob)
         ml_blob = write_ocf(
             ICEBERG_MANIFEST_FILE_SCHEMA,
@@ -4002,7 +3442,7 @@ def _iceberg_v3_defaults_orders(spark: SparkSession, sf_dir: str) -> str:
                 }
             ],
         )
-        with open(os.path.join(tmp, "metadata", "snap-1.avro"), "wb") as fh:
+        with open(os.path.join(path, "metadata", "snap-1.avro"), "wb") as fh:
             fh.write(ml_blob)
         meta = {
             "format-version": 3,
@@ -4051,23 +3491,12 @@ def _iceberg_v3_defaults_orders(spark: SparkSession, sf_dir: str) -> str:
             ],
             "snapshot-log": [{"snapshot-id": 1, "timestamp-ms": 1000}],
         }
-        with open(os.path.join(tmp, "metadata", "v1.metadata.json"), "w") as fh:
+        with open(os.path.join(path, "metadata", "v1.metadata.json"), "w") as fh:
             _json.dump(meta, fh)
-        with open(os.path.join(tmp, "metadata", "version-hint.text"), "w") as fh:
+        with open(os.path.join(path, "metadata", "version-hint.text"), "w") as fh:
             fh.write("1")
-        if os.path.isfile(done):  # lost the build race
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                if os.path.isdir(path):  # stale partial
-                    stale = f"{path}.stale.{os.getpid()}"
-                    os.rename(path, stale)
-                    shutil.rmtree(stale, ignore_errors=True)
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    _ICEBERG_V3_DEFAULTS_CACHE[key] = path
-    return path
+
+    return _built("icebergv3def_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -4138,10 +3567,6 @@ def iceberg_v3_dv_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped handle to the build-once archived-timeline Hudi fixture
-_HUDI_ARCHIVED_CACHE: dict[str, str] = {}
-
-
 def _hudi_archived_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Hudi COW table whose EARLY history lives in the
     ARCHIVED timeline: t1 inserts the even orders, t2 the odd orders,
@@ -4151,26 +3576,12 @@ def _hudi_archived_orders(spark: SparkSession, sf_dir: str) -> str:
     archival service writes). Time travel to t2 must replay the
     archive; the latest snapshot must merge archived and active
     instants."""
-    import os
-    import shutil
-    import tempfile
-
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.hudi import (
         archive_hudi_instants,
         write_hudi,
     )
 
-    key = f"{sf_dir}"
-    if key in _HUDI_ARCHIVED_CACHE:
-        return _HUDI_ARCHIVED_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_hudiarch_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(path, ".hoodie", "archived")
-    if not os.path.isdir(done):
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -4189,8 +3600,8 @@ def _hudi_archived_orders(spark: SparkSession, sf_dir: str) -> str:
         )
         if archive_hudi_instants(path, t2) != 2:
             raise RuntimeError("fixture archival did not move t1+t2")
-    _HUDI_ARCHIVED_CACHE[key] = path
-    return path
+
+    return _built("hudiarch_v1", sf_dir, ("orders",), build)
 
 
 @query(
@@ -4238,11 +3649,6 @@ def hudi_archived_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderstatus")
 
 
-#: session-scoped handles to the iceberg/hudi lake-sync fixtures
-_LAKESYNC_ICE_CACHE: dict[str, str] = {}
-_LAKESYNC_HUDI_CACHE: dict[str, str] = {}
-
-
 def _lakesync_iceberg_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build-once NATIVE table filled by ``sync_from_iceberg`` ticks:
     initial load of the %2=0 snapshot, a compaction (replace snapshot —
@@ -4251,29 +3657,15 @@ def _lakesync_iceberg_orders(spark: SparkSession, sf_dir: str) -> str:
     skip). Equals orders only if the append-scan/compaction-skip/
     ledger composition is exactly-once."""
     import os
-    import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.iceberg_write import (
         compact_iceberg,
         write_iceberg,
     )
     from connected_data_lake_spark.streaming.lakesync import sync_from_iceberg
 
-    key = f"{sf_dir}"
-    if key in _LAKESYNC_ICE_CACHE:
-        return _LAKESYNC_ICE_CACHE[key]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_lakesync_ice_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    src = os.path.join(base, "iceberg_src")
-    dst = os.path.join(base, "native")
-    done = os.path.join(base, "_done")
-    if not os.path.isfile(done):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
+        src, dst = os.path.join(base, "iceberg_src"), os.path.join(base, "native")
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -4287,10 +3679,8 @@ def _lakesync_iceberg_orders(spark: SparkSession, sf_dir: str) -> str:
             raise RuntimeError(
                 f"iceberg lake-sync fixture broke exactly-once: {v1} {v2} {v3}"
             )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    _LAKESYNC_ICE_CACHE[key] = dst
-    return dst
+
+    return os.path.join(_built("lakesync_ice_v1", sf_dir, ("orders",), build), "native")
 
 
 @query(
@@ -4333,26 +3723,12 @@ def _lakesync_hudi_orders(spark: SparkSession, sf_dir: str) -> str:
     the operationType fast path proves it append-only without touching
     the sink), and an idle tick (instant-ledger replay skip)."""
     import os
-    import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.hudi import write_hudi
     from connected_data_lake_spark.streaming.lakesync import sync_from_hudi
 
-    key = f"{sf_dir}"
-    if key in _LAKESYNC_HUDI_CACHE:
-        return _LAKESYNC_HUDI_CACHE[key]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"cdl_lakesync_hudi_v1_{_artifact_token(sf_dir, 'orders')}",
-    )
-    src = os.path.join(base, "hudi_src")
-    dst = os.path.join(base, "native")
-    done = os.path.join(base, "_done")
-    if not os.path.isfile(done):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
+        src, dst = os.path.join(base, "hudi_src"), os.path.join(base, "native")
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -4368,10 +3744,8 @@ def _lakesync_hudi_orders(spark: SparkSession, sf_dir: str) -> str:
             raise RuntimeError(
                 f"hudi lake-sync fixture broke exactly-once: {v1} {v2} {v3}"
             )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    _LAKESYNC_HUDI_CACHE[key] = dst
-    return dst
+
+    return os.path.join(_built("lakesync_hudi_v1", sf_dir, ("orders",), build), "native")
 
 
 @query(
@@ -4412,8 +3786,6 @@ def lakesync_hudi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Iceberg + Hudi tables registered side by side via Cdl.register_table
 # ---------------------------------------------------------------------------
 
-_FEDLAKE_CACHE: dict[str, str] = {}
-
 
 def _federated_lake_tables(spark: SparkSession, sf_dir: str) -> str:
     """Fixture root holding the SAME logical schema split across the three
@@ -4423,34 +3795,12 @@ def _federated_lake_tables(spark: SparkSession, sf_dir: str) -> str:
     federated read+join, not the one-time export, same contract as the
     bucketed-join and IVF-index fixtures)."""
     import os
-    import shutil
-    import tempfile
 
-    from connected_data_lake_spark.plans.extensions import _artifact_token
     from connected_data_lake_spark.sources.delta_write import write_delta
     from connected_data_lake_spark.sources.hudi import write_hudi
     from connected_data_lake_spark.sources.iceberg_write import write_iceberg
 
-    key = f"{sf_dir}"
-    if key in _FEDLAKE_CACHE:
-        return _FEDLAKE_CACHE[key]
-    root = os.path.join(
-        tempfile.gettempdir(),
-        # v2: v1 briefly built via a stage-then-rename under
-        # ``<root>.build.<pid>`` — the Iceberg manifests embed ABSOLUTE
-        # URIs, so a renamed build is poisoned (its metadata points at
-        # the deleted staging dir). The version bump orphans any such
-        # on-disk v1 fixture instead of trusting its _DONE marker.
-        f"cdl_fedlake_v2_{_artifact_token(sf_dir, 'orders')}",
-    )
-    done = os.path.join(root, "_DONE")
-    if not os.path.isfile(done):
-        # the Iceberg writer embeds ABSOLUTE file URIs in its manifests
-        # (spec behavior — see _iceberg_write_fixture), so every table
-        # builds at its FINAL path; a stale partial build is wiped first
-        # and the _DONE marker lands only after all three commits
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root: str) -> None:
         write_delta(
             load_table(spark, sf_dir, "customer").select(
                 "c_custkey", "c_nationkey", "c_acctbal"
@@ -4473,10 +3823,8 @@ def _federated_lake_tables(spark: SparkSession, sf_dir: str) -> str:
             record_key="s_suppkey",
             mode="insert",
         )
-        with open(done, "w") as fh:
-            fh.write("ok\n")
-    _FEDLAKE_CACHE[key] = root
-    return root
+
+    return _built("fedlake", sf_dir, ("customer", "orders", "supplier"), build)
 
 
 @query(

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from connected_data_lake_spark.plans import query
+from connected_data_lake_spark.plans.extensions import _built
 from connected_data_lake_spark.sources.rootfs import _chunk
 from connected_data_lake_spark.sources.tables import load_table
 
@@ -202,10 +203,6 @@ def rootfs_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("name", "chunk_id")
 
 
-#: session-scoped handles to the two build-once federated datasets
-_FED_CACHE: dict[str, tuple[str, str]] = {}
-
-
 def _federated_datasets(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build-once pair of REAL CdlFS datasets for the federation query —
     the engine half of the reference's "connected" data lakes (bucket
@@ -218,21 +215,11 @@ def _federated_datasets(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     real ingestion path (``CdlFS.load`` → binaryFile → transactional
     rootfs table)."""
     import os
-    import shutil
-    import tempfile
 
     from connected_data_lake_spark.filesystem import Cdl
-    from connected_data_lake_spark.plans.extensions import _artifact_token
 
-    if sf_dir in _FED_CACHE:
-        return _FED_CACHE[sf_dir]
-    base = os.path.join(
-        tempfile.gettempdir(), f"cdl_fed_v1_{_artifact_token(sf_dir, 'documents')}"
-    )
-    a_dir, b_dir = os.path.join(base, "a"), os.path.join(base, "b")
-    done = os.path.join(base, "_done")
-    if not os.path.isfile(done):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
+        a_dir, b_dir = os.path.join(base, "a"), os.path.join(base, "b")
         os.makedirs(a_dir), os.makedirs(b_dir)
         pdf = (
             load_table(spark, sf_dir, "documents")
@@ -251,10 +238,9 @@ def _federated_datasets(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         cdl = Cdl(spark=spark)
         fa, fb = cdl.open_all(f"local://{a_dir}", f"local://{b_dir}")
         fa.load(), fb.load()
-        with open(done, "w") as fh:
-            fh.write("ok")
-    _FED_CACHE[sf_dir] = (a_dir, b_dir)
-    return a_dir, b_dir
+
+    base = _built("fed_v1", sf_dir, ("documents",), build)
+    return os.path.join(base, "a"), os.path.join(base, "b")
 
 
 @query(

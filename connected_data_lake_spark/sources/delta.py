@@ -143,11 +143,7 @@ class ObjectStoreDeltaLog(DeltaLogStore):
 
     def list_names(self) -> list[str]:
         prefix = _LOG_DIR + "/"
-        keys = (
-            self._store.list_all_keys(prefix=prefix)
-            if hasattr(self._store, "list_all_keys")
-            else [k for k in self._store.list_keys() if k.startswith(prefix)]
-        )
+        keys = self._store.list_all_keys(prefix=prefix)
         return sorted(
             k[len(prefix):] for k in keys if k.startswith(prefix) and "/" not in k[len(prefix):]
         )

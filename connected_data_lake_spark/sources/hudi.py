@@ -1145,18 +1145,7 @@ def write_hudi(
     }
     if replaced:
         commit_meta["partitionToReplaceFileIds"] = replaced
-    tmp = os.path.join(hoodie, f".tmp-{token}.json")
-    with open(tmp, "w") as fh:
-        json.dump(commit_meta, fh)
-    final = os.path.join(hoodie, f"{instant}.{action}")
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise RuntimeError(
-            f"concurrent Hudi commit took instant {instant}; re-run"
-        )
-    finally:
-        os.unlink(tmp)
+    _commit_instant(hoodie, f"{instant}.{action}", commit_meta)
     if not exists:
         with open(props_path, "w") as fh:
             fh.write(
@@ -1182,6 +1171,27 @@ _AVRO_OF_SPARK = {
     "float": "float",
     "boolean": "boolean",
 }
+
+
+def _commit_instant(hoodie_dir: str, file_name: str, meta: dict) -> None:
+    """Put-if-absent commit of one completed instant: write the commit
+    metadata to a private temp file, then ``os.link`` it to
+    ``<hoodie_dir>/<file_name>`` — the link fails if a concurrent writer
+    already completed that instant (the shared tail of every Hudi
+    commit)."""
+    import uuid as _uuid
+
+    tmp = os.path.join(hoodie_dir, f".tmp-{_uuid.uuid4().hex}.json")
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh)
+    try:
+        os.link(tmp, os.path.join(hoodie_dir, file_name))
+    except FileExistsError:
+        raise RuntimeError(
+            f"concurrent Hudi commit took instant {file_name}; re-run"
+        )
+    finally:
+        os.unlink(tmp)
 
 
 def _avro_block_schema(df_schema, record_key: str) -> dict:
@@ -1402,19 +1412,9 @@ def _hudi_mor_apply(
         "partitionToWriteStats": stats,
         "operationType": "DELETE" if is_delete else "UPSERT",
     }
-    hoodie = os.path.join(root, ".hoodie")
-    tmp = os.path.join(hoodie, f".tmp-{token}.json")
-    with open(tmp, "w") as fh:
-        json.dump(commit_meta, fh)
-    final = os.path.join(hoodie, f"{instant}.deltacommit")
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise RuntimeError(
-            f"concurrent Hudi commit took instant {instant}; re-run"
-        )
-    finally:
-        os.unlink(tmp)
+    _commit_instant(
+        os.path.join(root, ".hoodie"), f"{instant}.deltacommit", commit_meta
+    )
     return instant
 
 
@@ -1532,16 +1532,9 @@ def compact_hudi_mor(spark: SparkSession, path: str) -> str:
         "partitionToReplaceFileIds": replaced,
         "operationType": "COMPACT",
     }
-    tmp = os.path.join(root, ".hoodie", f".tmp-{token}.json")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    final = os.path.join(root, ".hoodie", f"{instant}.replacecommit")
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise RuntimeError(f"concurrent commit took instant {instant}")
-    finally:
-        os.unlink(tmp)
+    _commit_instant(
+        os.path.join(root, ".hoodie"), f"{instant}.replacecommit", meta
+    )
     return instant
 
 

@@ -197,11 +197,7 @@ class ObjectStoreIcebergTable(IcebergStore):
 
     def list_metadata_names(self) -> list[str]:
         prefix = "metadata/"
-        keys = (
-            self._store.list_all_keys(prefix=prefix)
-            if hasattr(self._store, "list_all_keys")
-            else [k for k in self._store.list_keys() if k.startswith(prefix)]
-        )
+        keys = self._store.list_all_keys(prefix=prefix)
         return sorted(
             k[len(prefix):]
             for k in keys

@@ -555,26 +555,7 @@ def write_iceberg(
             {"snapshot-id": snap_id, "timestamp-ms": now_ms}
         ],
     }
-    meta_dir = os.path.join(path, "metadata")
-    tmp = os.path.join(meta_dir, f".tmp-{token}.json")
-    with open(tmp, "w") as fh:
-        json.dump(new_meta, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    final = os.path.join(meta_dir, f"v{meta_ver}.metadata.json")
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise RuntimeError(
-            f"concurrent Iceberg commit took v{meta_ver} under {path}; "
-            "re-run the write (staged data files are orphaned, not live)"
-        )
-    finally:
-        os.unlink(tmp)
-    hint = os.path.join(meta_dir, f".tmp-hint-{token}")
-    with open(hint, "w") as fh:
-        fh.write(str(meta_ver))
-    os.replace(hint, os.path.join(meta_dir, "version-hint.text"))
+    _commit_iceberg_metadata(path, meta_ver - 1, new_meta, token)
     return snap_id
 
 
@@ -703,23 +684,7 @@ def expire_iceberg_snapshots(
         for e in meta0.get("snapshot-log", [])
         if e["snapshot-id"] in retained_ids
     ]
-    meta_ver = prev_ver + 1
-    tmp = os.path.join(path, "metadata", f".tmp-exp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as fh:
-        json.dump(new_meta, fh)
-    final = os.path.join(path, "metadata", f"v{meta_ver}.metadata.json")
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise RuntimeError(
-            f"concurrent Iceberg commit took v{meta_ver}; re-run expiry"
-        )
-    finally:
-        os.unlink(tmp)
-    hint = os.path.join(path, "metadata", f".tmp-hint-{uuid.uuid4().hex}")
-    with open(hint, "w") as fh:
-        fh.write(str(meta_ver))
-    os.replace(hint, os.path.join(path, "metadata", "version-hint.text"))
+    _commit_iceberg_metadata(path, prev_ver, new_meta, uuid.uuid4().hex)
     for rel in doomed:
         try:
             os.unlink(os.path.join(path, rel))
@@ -833,20 +798,24 @@ def _iceberg_data_entries(
 
 
 def _commit_iceberg_metadata(
-    path: str, meta0: dict, prev_ver: int, new_meta: dict, token: str
+    path: str, prev_ver: int, new_meta: dict, token: str
 ) -> None:
-    """Put-if-absent commit of ``v{prev_ver+1}.metadata.json`` + atomic
-    version-hint update (the shared tail of every Iceberg commit)."""
+    """Put-if-absent commit of ``v{prev_ver+1}.metadata.json`` (synced
+    before it is linked into place) + atomic version-hint update: the
+    shared tail of every Iceberg commit."""
     meta_ver = prev_ver + 1
     tmp = os.path.join(path, "metadata", f".tmp-{token}.json")
     with open(tmp, "w") as fh:
         json.dump(new_meta, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
     final = os.path.join(path, "metadata", f"v{meta_ver}.metadata.json")
     try:
         os.link(tmp, final)
     except FileExistsError:
         raise RuntimeError(
-            f"concurrent Iceberg commit took v{meta_ver}; re-run the DML"
+            f"concurrent Iceberg commit took v{meta_ver} under {path}; "
+            "re-run the operation (its staged files are orphaned, not live)"
         )
     finally:
         os.unlink(tmp)
@@ -1051,7 +1020,7 @@ def _rewrite_matching_files_iceberg(
     new_meta["snapshot-log"] = list(meta0.get("snapshot-log", [])) + [
         {"snapshot-id": snap_id, "timestamp-ms": now_ms}
     ]
-    _commit_iceberg_metadata(path, meta0, prev_ver, new_meta, token)
+    _commit_iceberg_metadata(path, prev_ver, new_meta, token)
     return snap_id, n_deleted
 
 
@@ -1303,7 +1272,7 @@ def _mor_mark_matching_iceberg(
     ]
     if new_specs is not None:  # delete manifests introduced the unpartitioned spec
         new_meta["partition-specs"] = new_specs
-    _commit_iceberg_metadata(path, meta0, prev_ver, new_meta, token)
+    _commit_iceberg_metadata(path, prev_ver, new_meta, token)
     return snap_id, n_hits
 
 
@@ -1534,7 +1503,7 @@ def equality_delete_iceberg(
     ]
     if new_specs is not None:  # delete manifests introduced the unpartitioned spec
         new_meta["partition-specs"] = new_specs
-    _commit_iceberg_metadata(path, meta0, prev_ver, new_meta, token)
+    _commit_iceberg_metadata(path, prev_ver, new_meta, token)
     return snap_id
 
 
@@ -1650,5 +1619,5 @@ def rollback_iceberg(path: str, snapshot_id: int) -> int:
     new_meta["snapshot-log"] = list(meta0.get("snapshot-log", [])) + [
         {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}
     ]
-    _commit_iceberg_metadata(path, meta0, prev_ver, new_meta, uuid.uuid4().hex)
+    _commit_iceberg_metadata(path, prev_ver, new_meta, uuid.uuid4().hex)
     return snapshot_id

@@ -170,7 +170,11 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     index persists, localCheckpoint blocks). One py4j round-trip: the
     Integer key set stringifies as "[1, 2, 3]" — parsed here instead of
     shipping each boxed key individually."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return _rdd_ids(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def _rdd_ids(jmap) -> set[int]:
+    """Key set of a ``getPersistentRDDs()`` map."""
     keys = jmap.keySet().toString().strip("[]")
     return {int(k) for k in keys.split(", ") if k}
 
@@ -195,9 +199,8 @@ def stray_cache_ids(spark: SparkSession, keep_ids: set[int]) -> set[int]:
     only for ids not yet classified (each id is classified once per
     process — the common steady state is zero new ids and zero strays)."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    ids = persistent_rdd_ids(spark)
     out: set[int] = set()
-    for rid in ids:
+    for rid in _rdd_ids(jmap):
         if rid in keep_ids or rid in _LC_BLOCK_IDS:
             continue
         rdd = jmap.get(rid)
