@@ -601,7 +601,10 @@ class CdlFS:
         order = Window.orderBy("parent", "name", "chunk_id")
         rowid = (F.row_number().over(order) - 1).cast("long")
         indexed = self.table().withColumn("_rowid", rowid)
-        out = indexed.filter(F.col("_rowid").isin(idx))
+        # An array literal reaches the generated class by reference, so one
+        # class serves every ordinal list; isin with up to 10 values wrote
+        # them into the class and compiled 2 new classes per call.
+        out = indexed.filter(F.array_contains(F.lit(idx), F.col("_rowid")))
         return out.select("_rowid", *columns).orderBy("_rowid")
 
     # -- copy pipeline (S5/S6) ----------------------------------------------

@@ -466,8 +466,11 @@ def _built(
     return _BUILT[key]
 
 
-#: session-scoped handles to the on-disk incremental-dedup corpus index
-_DEDUP_IDX_CACHE: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
+#: session-scoped handles to the on-disk incremental-dedup corpus index.
+#: Like every handle memo below, keyed on (id(spark), artifact path): a
+#: held DataFrame keeps its session alive, so the id cannot be reused by a
+#: later session while the entry exists, and the path carries the temp dir.
+_DEDUP_IDX_CACHE: dict[tuple[int, str], tuple[DataFrame, ...]] = {}
 
 
 def _dedup_corpus_index(
@@ -496,9 +499,9 @@ def _dedup_corpus_index(
         sh_c.write.parquet(os.path.join(path, "shingles"))
         sh_c.unpersist()
 
-    key = f"{id(spark)}:{sf_dir}"
+    path = _built("dedupidx_v1", sf_dir, ("documents",), build)
+    key = (id(spark), path)
     if key not in _DEDUP_IDX_CACHE:
-        path = _built("dedupidx_v1", sf_dir, ("documents",), build)
         _DEDUP_IDX_CACHE[key] = (
             spark.read.parquet(os.path.join(path, "fp")),
             spark.read.parquet(os.path.join(path, "bands")),
@@ -782,17 +785,18 @@ _KNN_PROBE_CONTRACT_ORACLE = """
 #: At cluster scale this is the standard recipe (FAISS/ann-benchmarks): the
 #: ground-truth file is computed once per index build and shipped beside it,
 #: so recall checks never re-run brute force at query time.
-_GT_CACHE: dict[str, DataFrame] = {}
+_GT_CACHE: dict[tuple[int, str], DataFrame] = {}
 
-#: embedding width per (session, sf_dir) — index METADATA (every ANN
-#: artifact records its dim; FAISS stores d in the header). Deriving it
-#: per probe re-scanned one parquet row per plan build (a whole Spark job
-#: of pure floor); cache it like the artifacts themselves.
+#: embedding width per embeddings file (keyed on its content token) —
+#: index METADATA (every ANN artifact records its dim; FAISS stores d in
+#: the header). Deriving it per probe re-scanned one parquet row per plan
+#: build (a whole Spark job of pure floor); cache it like the artifacts
+#: themselves.
 _EMB_DIM_CACHE: dict[str, int] = {}
 
 
 def _emb_dim(spark: SparkSession, sf_dir: str) -> int:
-    key = f"{id(spark)}:{sf_dir}"
+    key = _artifact_token(sf_dir, "embeddings")
     if key not in _EMB_DIM_CACHE:
         emb = load_table(spark, sf_dir, "embeddings")
         _EMB_DIM_CACHE[key] = emb.select(
@@ -807,11 +811,10 @@ def _gt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries = emb.filter(F.col("vec_id").isin(0, 1, 2))
         SIM.knn_brute_force(emb, queries, k=10).write.parquet(path)
 
-    key = f"{id(spark)}:{sf_dir}"
+    path = _built("knngt", sf_dir, ("embeddings",), build)
+    key = (id(spark), path)
     if key not in _GT_CACHE:
-        _GT_CACHE[key] = spark.read.parquet(
-            _built("knngt", sf_dir, ("embeddings",), build)
-        )
+        _GT_CACHE[key] = spark.read.parquet(path)
     return _GT_CACHE[key]
 
 
@@ -1086,7 +1089,7 @@ def text_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: lazy per-(session, sf_dir) handles to the PQ code index, built once per
 #: corpus by :func:`_built` like the IVF cells and the dedup corpus index:
 #: the code table plus its seeded codebooks as a ``_codebooks.npy`` sidecar.
-_PQ_CACHE: dict[str, tuple] = {}
+_PQ_CACHE: dict[tuple[int, str], tuple] = {}
 
 
 def _pq_indexed(spark: SparkSession, sf_dir: str):
@@ -1104,9 +1107,9 @@ def _pq_indexed(spark: SparkSession, sf_dir: str):
         ).write.parquet(path)
         np.save(os.path.join(path, "_codebooks.npy"), books)
 
-    key = f"{id(spark)}:{sf_dir}"
+    path = _built("pq", sf_dir, ("embeddings",), build)
+    key = (id(spark), path)
     if key not in _PQ_CACHE:
-        path = _built("pq", sf_dir, ("embeddings",), build)
         books = np.load(os.path.join(path, "_codebooks.npy"))
         _PQ_CACHE[key] = (books, spark.read.parquet(path))
     return _PQ_CACHE[key]
@@ -1188,7 +1191,7 @@ def knn_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: survives session cache churn); reruns reuse the resolved scan relation
 #: (re-planning the read per probe paid directory listing + schema
 #: resolution on every call).
-_IVF_CACHE: dict[str, tuple[DataFrame, list]] = {}
+_IVF_CACHE: dict[tuple[int, str], tuple[DataFrame, list]] = {}
 
 
 def _ivf_indexed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
@@ -1212,9 +1215,9 @@ def _ivf_indexed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
         with open(os.path.join(path, "_centroids.json"), "w") as fh:
             json.dump(centroids, fh)
 
-    key = f"{id(spark)}:{sf_dir}"
+    path = _built("ivf", sf_dir, ("embeddings",), build)
+    key = (id(spark), path)
     if key not in _IVF_CACHE:
-        path = _built("ivf", sf_dir, ("embeddings",), build)
         with open(os.path.join(path, "_centroids.json")) as fh:
             centroids = json.load(fh)
         _IVF_CACHE[key] = (spark.read.parquet(path), centroids)
@@ -1538,10 +1541,11 @@ def pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucketed co-located join
 # ---------------------------------------------------------------------------
 
-#: lazy per-(session, sf_dir) bucketed layout of orders + lineitem on the
-#: orderkey: like the IVF index, bucketing is an OFFLINE layout job — the
-#: declared query times the exchange-free join, not the one-time re-layout.
-_BUCKETED_CACHE: dict[str, tuple[str, str]] = {}
+#: lazy per-(session, sf_dir) table handles to the bucketed layout of
+#: orders + lineitem on the orderkey: like the IVF index, bucketing is an
+#: OFFLINE layout job — the declared query times the exchange-free join,
+#: not the one-time re-layout.
+_BUCKETED_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
 
 
 def _bucketed_order_tables(
@@ -1552,7 +1556,7 @@ def _bucketed_order_tables(
 
     from connected_data_lake_spark.sources.bucketed import write_bucketed
 
-    key = f"{id(spark)}:{sf_dir}"
+    key = (id(spark), sf_dir)
     if key not in _BUCKETED_CACHE:
         h = _artifact_token(sf_dir, "orders", "lineitem")
         names = (f"cdl_bkt_orders_{h}", f"cdl_bkt_lineitem_{h}")
@@ -1570,9 +1574,8 @@ def _bucketed_order_tables(
                         tempfile.gettempdir(), f"cdl_bkt_{h}", table
                     ),
                 )
-        _BUCKETED_CACHE[key] = names
-    o_name, l_name = _BUCKETED_CACHE[key]
-    return spark.table(o_name), spark.table(l_name)
+        _BUCKETED_CACHE[key] = (spark.table(names[0]), spark.table(names[1]))
+    return _BUCKETED_CACHE[key]
 
 
 @query(
@@ -2796,7 +2799,7 @@ def knn_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SRP_CACHE: dict[str, DataFrame] = {}
+_SRP_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 
 def _sketch_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2809,11 +2812,10 @@ def _sketch_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         SIM.sketch_index(emb, dim=_emb_dim(spark, sf_dir)).write.parquet(path)
 
-    key = f"{id(spark)}:{sf_dir}"
+    path = _built("srp", sf_dir, ("embeddings",), build)
+    key = (id(spark), path)
     if key not in _SRP_CACHE:
-        _SRP_CACHE[key] = spark.read.parquet(
-            _built("srp", sf_dir, ("embeddings",), build)
-        )
+        _SRP_CACHE[key] = spark.read.parquet(path)
     return _SRP_CACHE[key]
 
 
@@ -4213,7 +4215,7 @@ def _kmeans_assign_sql(src: str, k: int, n_iter: int) -> str:
     return "".join(parts)
 
 
-_SEMDEDUP_CACHE: dict[str, DataFrame] = {}
+_SEMDEDUP_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 
 def _semdedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4250,11 +4252,10 @@ def _semdedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.parquet(path)
         aug.unpersist()
 
-    key = f"{id(spark)}:{sf_dir}"
+    path = _built("semdedup", sf_dir, ("embeddings",), build)
+    key = (id(spark), path)
     if key not in _SEMDEDUP_CACHE:
-        _SEMDEDUP_CACHE[key] = spark.read.parquet(
-            _built("semdedup", sf_dir, ("embeddings",), build)
-        )
+        _SEMDEDUP_CACHE[key] = spark.read.parquet(path)
     return _SEMDEDUP_CACHE[key]
 
 

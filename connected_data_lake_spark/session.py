@@ -60,6 +60,10 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+#: Whole-stage codegen class-cache size set by get_spark (see there).
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def default_parallelism() -> int:
     """Worker-thread count for local mode: $SPARK_GRAFT_CPUS or all cores."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -106,6 +110,12 @@ def get_spark(
     same code runs with cluster defaults + AQE coalescing, which re-sizes
     post-shuffle partitions at runtime, so a static number here only seeds
     the local case.
+
+    The generated-class cache (``spark.sql.codegen.cache.maxEntries``) is
+    sized here, on ``SparkSession.builder``, because Spark creates it once
+    per JVM at the first codegen: :func:`prepare_session` cannot change
+    it, so a session built elsewhere keeps Spark's 100 entries.
+    ``extra_confs`` still overrides it.
     """
     cpus = default_parallelism()
     builder = (
@@ -141,6 +151,16 @@ def get_spark(
         # Binary-heavy tables (rootfs.data payloads): bound scan partition
         # size so a partition of 1 GiB-payload rows still fits in memory.
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # Whole-stage codegen keeps compiled classes in one JVM-wide cache
+        # of 100 entries by default, while one pass of the 11-member
+        # perfbench `queries` deck compiles ~190 classes and one pass of
+        # all 231 declared queries ~2,400. At 100, every run of every
+        # query in an interleaved mix recompiled its classes and ran them
+        # before the JIT had compiled them. 4096 holds one pass of the
+        # suite: on 4 cores at sf0.01 a second pass over the 231 queries
+        # went 95.4 -> 65.4 s (compiles 3,523 -> 75), Metaspace 199 -> 213
+        # MB (BENCH.md). Static: read once per JVM, at the first codegen.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

@@ -1242,7 +1242,6 @@ def _hudi_mor_apply(
     with the combined write stats; :func:`read_hudi_mor` merges it by
     (instant, version) order, newest write winning per key.
     """
-    import glob as _glob
     import shutil
     import uuid as _uuid
 
@@ -1469,7 +1468,6 @@ def compact_hudi_mor(spark: SparkSession, path: str) -> str:
     This is the INSERT_OVERWRITE form of compaction (whole-snapshot
     rewrite); Hudi's incremental per-file-group compaction is the
     upgrade path when only a few groups carry long chains."""
-    import glob
     import shutil
     import uuid as _uuid
 

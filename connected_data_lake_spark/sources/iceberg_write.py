@@ -595,8 +595,6 @@ def compact_iceberg(
         # partition + sort, so the written manifests' per-file column
         # bounds are tight on EVERY clustered column and
         # read_iceberg(filters=…) static pruning bites on each
-        from pyspark.sql import functions as F
-
         from connected_data_lake_spark.sources.zorder import morton_code
 
         df = (
@@ -1367,8 +1365,6 @@ def equality_delete_iceberg(
     it; driver-verified in ``iceberg_eq_delete_read``). Deletes are
     global (unpartitioned scope — the only scope the reader applies).
     Returns the new snapshot id."""
-    from pyspark.sql import functions as F
-
     cur = _current_meta(path)
     if cur is None:
         raise FileNotFoundError(f"not an Iceberg table: {path}")

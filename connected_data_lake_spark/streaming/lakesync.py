@@ -113,8 +113,9 @@ def sync_from_delta(
         return None, latest
     ch = read_delta_changes(spark, delta_path, mark + 1, latest)
     if on_change == "error":
-        bad = ch.filter(F.col("_change_type") != "insert").limit(1).count()
-        if bad:
+        # isEmpty, not limit(1).count(): over an insert-only range the
+        # filter folds to an empty local scan and isEmpty runs no job
+        if not ch.filter(F.col("_change_type") != "insert").isEmpty():
             raise ValueError(
                 f"Delta versions {mark + 1}..{latest} contain deletes — "
                 "the append-only sync contract is broken (use "

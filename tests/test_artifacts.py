@@ -1,5 +1,7 @@
 """The build-once artifact helper behind every on-disk lake fixture and
-offline index (``plans.extensions._built``), checked without Spark."""
+offline index (``plans.extensions._built``), checked without Spark, and
+the session's DataFrame-handle memo over one of its artifacts (the last
+test, which uses the Spark fixture)."""
 
 from __future__ import annotations
 
@@ -119,3 +121,41 @@ def test_changed_source_builds_a_new_artifact(sf_dir, tmp_path, monkeypatch):
     second = _built("c", sf_dir, ("orders",), _writer(calls))
     assert calls == [first, second]
     assert os.path.basename(first) != os.path.basename(second)
+
+
+def test_handle_memo_reads_the_artifact_of_the_current_temp_dir(
+    spark, tmp_path, monkeypatch
+):
+    """A memoized DataFrame handle over a built artifact follows the temp
+    dir: after repointing ``tempfile.tempdir`` in the same session, the
+    handle reads the artifact built under the new dir."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from connected_data_lake_spark.plans.extensions import _gt_topk
+
+    data = tmp_path / "emb"
+    data.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(20), pa.int64()),
+                "embedding": pa.array(
+                    [[float(i), 1.0, float(i % 3), 0.5] for i in range(20)],
+                    pa.list_(pa.float32()),
+                ),
+                "label": pa.array([i % 2 for i in range(20)], pa.int32()),
+            }
+        ),
+        data / "embeddings.parquet",
+    )
+    rows = []
+    for name in ("a", "b"):
+        tmp = tmp_path / name
+        tmp.mkdir()
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+        gt = _gt_topk(spark, str(data))
+        files = gt.inputFiles()
+        assert files and all(str(tmp) in f for f in files)
+        rows.append(sorted(tuple(r) for r in gt.collect()))
+    assert rows[0] == rows[1]

@@ -9,7 +9,9 @@ these, captured before and after each change.
 Plans are captured in bench.py's state: after ``bench.setup`` (offline
 indexes built, table registry pinned) and one ``bench.run_once`` of the
 query, so the capture shows the plan the timed runs execute. The run's
-plan/exec seconds are printed next to each written path.
+plan/exec seconds and its count of whole-stage codegen compiles (the
+``CodegenMetrics`` delta; 0 when every class came from the JVM's
+generated-class cache) are printed next to each written path.
 
     python tools/capture_plans.py --suffix before name1 name2 ...
     python tools/capture_plans.py --suffix before --all
@@ -54,6 +56,8 @@ def main() -> None:
 
     spark = get_spark("cdl-spark-capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
     if capture_all:
         names = sorted(all_specs())
     ids = setup(spark, sf_dir)
@@ -66,8 +70,10 @@ def main() -> None:
             continue
         timing = ""
         try:
+            c0 = compiles.getCount()
             build_s, exec_s, ids = run_once(spark, spec, sf_dir, ids)
-            timing = f" (plan {build_s:.3f}s, exec {exec_s:.3f}s)"
+            n = compiles.getCount() - c0
+            timing = f" (plan {build_s:.3f}s, exec {exec_s:.3f}s, {n} compiles)"
             df = spec.spark(spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
