@@ -1541,7 +1541,7 @@ def pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucketed co-located join
 # ---------------------------------------------------------------------------
 
-#: lazy per-(session, sf_dir) table handles to the bucketed layout of
+#: per-(session, artifact path) table handles to the bucketed layout of
 #: orders + lineitem on the orderkey: like the IVF index, bucketing is an
 #: OFFLINE layout job — the declared query times the exchange-free join,
 #: not the one-time re-layout.
@@ -1551,30 +1551,45 @@ _BUCKETED_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
 def _bucketed_order_tables(
     spark: SparkSession, sf_dir: str, n_buckets: int = 8
 ) -> tuple[DataFrame, DataFrame]:
+    """Catalog tables over the build-once bucketed layout (:func:`_built`).
+    The files are written once per artifact; a session whose catalog lacks
+    a table only registers it over the existing files, so no session ever
+    rewrites files another may be reading."""
     import os
-    import tempfile
 
     from connected_data_lake_spark.sources.bucketed import write_bucketed
 
-    key = (id(spark), sf_dir)
+    specs = (("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
+
+    def name_of(path: str, table: str) -> str:
+        return f"{os.path.basename(path)}_{table}"
+
+    def build(path: str) -> None:
+        for table, k in specs:
+            write_bucketed(
+                load_table(spark, sf_dir, table),
+                name_of(path, table),
+                [k],
+                n_buckets=n_buckets,
+                path=os.path.join(path, table),
+            )
+
+    path = _built("bkt", sf_dir, ("orders", "lineitem"), build)
+    key = (id(spark), path)
     if key not in _BUCKETED_CACHE:
-        h = _artifact_token(sf_dir, "orders", "lineitem")
-        names = (f"cdl_bkt_orders_{h}", f"cdl_bkt_lineitem_{h}")
-        for table, name, k in (
-            ("orders", names[0], "o_orderkey"),
-            ("lineitem", names[1], "l_orderkey"),
-        ):
+        for table, k in specs:
+            name, loc = name_of(path, table), os.path.join(path, table)
             if not spark.catalog.tableExists(name):
-                write_bucketed(
-                    load_table(spark, sf_dir, table),
-                    name,
-                    [k],
-                    n_buckets=n_buckets,
-                    path=os.path.join(
-                        tempfile.gettempdir(), f"cdl_bkt_{h}", table
-                    ),
+                # Spark refuses a bucket spec without an explicit column list
+                ddl = spark.read.parquet(loc).schema.toDDL()
+                spark.sql(
+                    f"CREATE TABLE {name} ({ddl}) USING parquet "
+                    f"CLUSTERED BY ({k}) SORTED BY ({k}) INTO {n_buckets} "
+                    f"BUCKETS LOCATION '{loc}'"
                 )
-        _BUCKETED_CACHE[key] = (spark.table(names[0]), spark.table(names[1]))
+        _BUCKETED_CACHE[key] = tuple(
+            spark.table(name_of(path, table)) for table, _k in specs
+        )
     return _BUCKETED_CACHE[key]
 
 

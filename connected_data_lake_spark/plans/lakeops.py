@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from connected_data_lake_spark.operators import lakeops as LK
 from connected_data_lake_spark.plans import query
 from connected_data_lake_spark.plans.extensions import _built
+from connected_data_lake_spark.sources.staging import write_single_parquet
 from connected_data_lake_spark.sources.tables import load_table
 
 
@@ -258,28 +259,20 @@ def _delta_external_orders(spark: SparkSession, sf_dir: str) -> str:
     travel, against a log this engine did not write through its own
     manifest format. Data is written executor-side (coalesced Spark
     writes, files renamed into place); only log JSON is driver-built."""
-    import glob
     import json as _json
     import os
-    import shutil
 
     def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
 
-        def write_one(df: DataFrame, relname: str) -> None:
-            part_dir = os.path.join(path, f".stage-{relname}")
-            df.coalesce(1).write.mode("overwrite").parquet(part_dir)
-            part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(path, relname))
-            shutil.rmtree(part_dir, ignore_errors=True)
-
         os.makedirs(os.path.join(path, "_delta_log"), exist_ok=True)
         key3 = F.col("o_orderkey") % 3
-        write_one(o.filter(key3 == 0), "a.parquet")
-        write_one(o.filter(key3 == 1), "b.parquet")
-        write_one(o.filter(key3 == 2), "c.parquet")
+        sizes = {
+            rel: write_single_parquet(o.filter(key3 == i), os.path.join(path, rel))
+            for i, rel in enumerate(("a.parquet", "b.parquet", "c.parquet"))
+        }
         meta = {
             "metaData": {
                 "id": "cdl-external-orders",
@@ -296,7 +289,7 @@ def _delta_external_orders(spark: SparkSession, sf_dir: str) -> str:
                 "add": {
                     "path": rel,
                     "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(path, rel)),
+                    "size": sizes[rel],
                     "modificationTime": 0,
                     "dataChange": True,
                 }
@@ -453,10 +446,8 @@ def _iceberg_external_orders(spark: SparkSession, sf_dir: str) -> str:
     deflate codec), the metadata JSON is format-version 2 with a
     snapshot-log for timestamp travel — a log this engine did not write
     through its own manifest format, exercised purely as a reader."""
-    import glob
     import json as _json
     import os
-    import shutil
 
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
 
@@ -467,17 +458,13 @@ def _iceberg_external_orders(spark: SparkSession, sf_dir: str) -> str:
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
 
-        def write_one(df: DataFrame, relname: str) -> int:
-            part_dir = os.path.join(path, f".stage-{relname}")
-            df.coalesce(1).write.mode("overwrite").parquet(part_dir)
-            part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(path, "data", relname))
-            shutil.rmtree(part_dir, ignore_errors=True)
-            return os.path.getsize(os.path.join(path, "data", relname))
-
         key3 = F.col("o_orderkey") % 3
-        sizes = {rel: write_one(o.filter(key3 == i), rel)
-                 for i, rel in enumerate(("a.parquet", "b.parquet", "c.parquet"))}
+        sizes = {
+            rel: write_single_parquet(
+                o.filter(key3 == i), os.path.join(path, "data", rel)
+            )
+            for i, rel in enumerate(("a.parquet", "b.parquet", "c.parquet"))
+        }
 
         def entry(status: int, rel: str, snap: int) -> dict:
             return {
@@ -817,10 +804,8 @@ def _iceberg_part_orders(spark: SparkSession, sf_dir: str) -> str:
     manifest per file carrying the partition value and o_orderkey
     lower/upper bounds, and a manifest LIST with partition-field
     summaries — the full static-pruning surface of the spec."""
-    import glob
     import json as _json
     import os
-    import shutil
 
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
 
@@ -839,21 +824,14 @@ def _iceberg_part_orders(spark: SparkSession, sf_dir: str) -> str:
             .collect()
         }
 
-        def write_one(status: str) -> tuple[str, int]:
-            rel = f"{status}.parquet"
-            part_dir = os.path.join(path, f".stage-{rel}")
-            o.filter(F.col("o_orderstatus") == status).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(part_dir)
-            part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(path, "data", rel))
-            shutil.rmtree(part_dir, ignore_errors=True)
-            return rel, os.path.getsize(os.path.join(path, "data", rel))
-
         entry_schema = iceberg_entry_schema([("o_orderstatus", "string")])
         manifests = []
         for status in statuses:
-            rel, size = write_one(status)
+            rel = f"{status}.parquet"
+            size = write_single_parquet(
+                o.filter(F.col("o_orderstatus") == status),
+                os.path.join(path, "data", rel),
+            )
             lo, hi = stats[status]
             entry = {
                 "status": 1,
@@ -1011,10 +989,8 @@ def _iceberg_mor_orders(spark: SparkSession, sf_dir: str) -> str:
     are computed by reading the written file back through Spark's own
     ``_metadata.row_index``, so the fixture's notion of "position" is
     exactly the scan's."""
-    import glob
     import json as _json
     import os
-    import shutil
 
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
 
@@ -1025,15 +1001,7 @@ def _iceberg_mor_orders(spark: SparkSession, sf_dir: str) -> str:
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
 
-        def install_one(df: DataFrame, rel: str) -> int:
-            part_dir = os.path.join(path, f".stage-{rel}")
-            df.coalesce(1).write.mode("overwrite").parquet(part_dir)
-            part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(path, "data", rel))
-            shutil.rmtree(part_dir, ignore_errors=True)
-            return os.path.getsize(os.path.join(path, "data", rel))
-
-        a_size = install_one(o, "a.parquet")
+        a_size = write_single_parquet(o, os.path.join(path, "data", "a.parquet"))
         a_final = f"{path}/data/a.parquet"
         # delete file: (file_path, pos) of rows with o_orderkey % 10 == 3,
         # positions read back via the scan's own row_index (executor-side)
@@ -1043,7 +1011,7 @@ def _iceberg_mor_orders(spark: SparkSession, sf_dir: str) -> str:
             .filter(F.col("o_orderkey") % 10 == 3)
             .select(F.lit(a_final).alias("file_path"), "pos")
         )
-        d_size = install_one(dels, "d.parquet")
+        d_size = write_single_parquet(dels, os.path.join(path, "data", "d.parquet"))
 
         data_entry = {
             "status": 1,
@@ -1191,10 +1159,8 @@ def _delta_cm_orders(spark: SparkSession, sf_dir: str) -> str:
     (reader protocol 2): data files carry PHYSICAL column names
     (``col-<uuid>`` style), the schemaString maps them to logical names —
     the default layout of many modern Delta writers (VERDICT r10 #4)."""
-    import glob
     import json as _json
     import os
-    import shutil
 
     def build(path: str) -> None:
         os.makedirs(os.path.join(path, "_delta_log"))
@@ -1207,17 +1173,9 @@ def _delta_cm_orders(spark: SparkSession, sf_dir: str) -> str:
             *[F.col(ln).alias(pn) for ln, pn in phys.items()]
         )
 
-        def write_one(df: DataFrame, relname: str) -> int:
-            part_dir = os.path.join(path, f".stage-{relname}")
-            df.coalesce(1).write.mode("overwrite").parquet(part_dir)
-            part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(path, relname))
-            shutil.rmtree(part_dir, ignore_errors=True)
-            return os.path.getsize(os.path.join(path, relname))
-
         key2 = F.col(phys["o_orderkey"]) % 2
         sizes = {
-            rel: write_one(o.filter(key2 == i), rel)
+            rel: write_single_parquet(o.filter(key2 == i), os.path.join(path, rel))
             for i, rel in enumerate(("a.parquet", "b.parquet"))
         }
         fields = [
@@ -1280,10 +1238,8 @@ def _iceberg_eqdel_orders(spark: SparkSession, sf_dir: str) -> str:
     scoping is load-bearing: the delete applies only to strictly-older
     data, so B's rows survive — a positional-only or unscoped equality
     application would delete them and diverge from the oracle."""
-    import glob
     import json as _json
     import os
-    import shutil
 
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
 
@@ -1295,13 +1251,8 @@ def _iceberg_eqdel_orders(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def install_one(df: DataFrame, rel: str) -> tuple[int, int]:
-            part_dir = os.path.join(path, f".stage-{rel}")
-            df.coalesce(1).write.mode("overwrite").parquet(part_dir)
-            part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(path, "data", rel))
-            shutil.rmtree(part_dir, ignore_errors=True)
-            n = spark.read.parquet(os.path.join(path, "data", rel)).count()
-            return os.path.getsize(os.path.join(path, "data", rel)), n
+            size = write_single_parquet(df, os.path.join(path, "data", rel))
+            return size, spark.read.parquet(os.path.join(path, "data", rel)).count()
 
         a_size, a_n = install_one(o, "a.parquet")
         d_size, d_n = install_one(
@@ -1468,10 +1419,8 @@ def _delta_dv_orders(spark: SparkSession, sf_dir: str) -> str:
     exact positions the scan will see), serialized as a CRC-framed
     RoaringBitmapArray in ``deletion_vector_<uuid>.bin``."""
     import base64
-    import glob
     import json as _json
     import os
-    import shutil
     import struct as _struct
     import uuid as _uuid
     import zlib
@@ -1483,11 +1432,7 @@ def _delta_dv_orders(spark: SparkSession, sf_dir: str) -> str:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-        part_dir = os.path.join(path, ".stage-a")
-        o.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        os.replace(part, os.path.join(path, "a.parquet"))
-        shutil.rmtree(part_dir, ignore_errors=True)
+        a_size = write_single_parquet(o, os.path.join(path, "a.parquet"))
         # deleted positions via the scan's own row_index (planning-sized
         # collect: one int per deleted fixture row)
         positions = sorted(
@@ -1529,7 +1474,7 @@ def _delta_dv_orders(spark: SparkSession, sf_dir: str) -> str:
                 "add": {
                     "path": "a.parquet",
                     "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(path, "a.parquet")),
+                    "size": a_size,
                     "modificationTime": 0,
                     "dataChange": True,
                     "deletionVector": {
@@ -1632,10 +1577,8 @@ def _hudi_orders(spark: SparkSession, sf_dir: str) -> str:
     surface the negated prices), and ``as_of_instant=t1`` exposes the
     stale slice for time travel. Slices carry a real
     ``_hoodie_commit_time`` meta column the reader must drop."""
-    import glob
     import json as _json
     import os
-    import shutil
 
     def build(path: str) -> None:
         t1, t2 = "20260101000000000", "20260102000000000"
@@ -1646,13 +1589,10 @@ def _hudi_orders(spark: SparkSession, sf_dir: str) -> str:
 
         def write_slice(df: DataFrame, file_id: str, instant: str) -> str:
             rel = f"{file_id}_0-1-0_{instant}.parquet"
-            stage = os.path.join(path, f".stage-{file_id}-{instant}")
-            df.select(
-                F.lit(instant).alias("_hoodie_commit_time"), "*"
-            ).coalesce(1).write.mode("overwrite").parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(path, rel))
-            shutil.rmtree(stage, ignore_errors=True)
+            write_single_parquet(
+                df.select(F.lit(instant).alias("_hoodie_commit_time"), "*"),
+                os.path.join(path, rel),
+            )
             return rel
 
         even = F.col("o_orderkey") % 2 == 0
@@ -1993,10 +1933,8 @@ def _hudi_mor_orders(spark: SparkSession, sf_dir: str) -> str:
     merge AND delete filtering all work. The upsert/delete record list
     is a fixture-build collect (one row per changed key), the same
     planning-sized class as the DV fixture's deleted positions."""
-    import glob
     import json as _json
     import os
-    import shutil
 
     from connected_data_lake_spark.sources.hudi import (
         encode_avro_data_block,
@@ -2010,14 +1948,13 @@ def _hudi_mor_orders(spark: SparkSession, sf_dir: str) -> str:
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
         base_rel = f"f1_0-1-0_{t1}.parquet"
-        stage = os.path.join(path, ".stage-base")
-        o.select(
-            F.col("o_orderkey").cast("string").alias("_hoodie_record_key"),
-            "*",
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        os.replace(part, os.path.join(path, base_rel))
-        shutil.rmtree(stage, ignore_errors=True)
+        write_single_parquet(
+            o.select(
+                F.col("o_orderkey").cast("string").alias("_hoodie_record_key"),
+                "*",
+            ),
+            os.path.join(path, base_rel),
+        )
 
         avro_schema = {
             "type": "record",
@@ -3187,10 +3124,8 @@ def _iceberg_v3_dv_orders(spark: SparkSession, sf_dir: str) -> str:
     carrying the v3 location fields 143-145. This is the delete shape
     v3 writers (Spark 4 + Iceberg 1.8, Trino) emit instead of
     position-delete files."""
-    import glob
     import json as _json
     import os
-    import shutil
     import struct as _struct
 
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
@@ -3202,12 +3137,7 @@ def _iceberg_v3_dv_orders(spark: SparkSession, sf_dir: str) -> str:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-        part_dir = os.path.join(path, ".stage-a")
-        o.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        os.replace(part, os.path.join(path, "data", "a.parquet"))
-        shutil.rmtree(part_dir, ignore_errors=True)
-        a_size = os.path.getsize(os.path.join(path, "data", "a.parquet"))
+        a_size = write_single_parquet(o, os.path.join(path, "data", "a.parquet"))
         a_final = f"{path}/data/a.parquet"
         # masked positions via the scan's own row_index (fixture-sized)
         positions = sorted(
@@ -3373,10 +3303,8 @@ def _iceberg_v3_defaults_orders(spark: SparkSession, sf_dir: str) -> str:
     (``% 3 = 0`` rows) carries real ``bonus = o_totalprice / 10``
     values. A ``write-default`` is declared too and must NOT affect the
     read (writer-side only)."""
-    import glob
     import json as _json
     import os
-    import shutil
 
     from connected_data_lake_spark.sources.avro_ocf import write_ocf
 
@@ -3396,11 +3324,9 @@ def _iceberg_v3_defaults_orders(spark: SparkSession, sf_dir: str) -> str:
                 ),
             ),
         ):
-            stage = os.path.join(path, f".stage-{name}")
-            df.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(path, "data", f"{name}.parquet"))
-            shutil.rmtree(stage, ignore_errors=True)
+            size = write_single_parquet(
+                df, os.path.join(path, "data", f"{name}.parquet")
+            )
             entries.append(
                 {
                     "status": 1,
@@ -3413,9 +3339,7 @@ def _iceberg_v3_defaults_orders(spark: SparkSession, sf_dir: str) -> str:
                         "file_format": "PARQUET",
                         "partition": {},
                         "record_count": 1,
-                        "file_size_in_bytes": os.path.getsize(
-                            os.path.join(path, "data", f"{name}.parquet")
-                        ),
+                        "file_size_in_bytes": size,
                     },
                 }
             )

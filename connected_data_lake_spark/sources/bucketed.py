@@ -32,7 +32,7 @@ parity target.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -41,31 +41,24 @@ def write_bucketed(
     keys: list[str] | tuple[str, ...],
     n_buckets: int = 32,
     path: str | None = None,
-    sort: bool = True,
-    mode: str = "overwrite",
 ) -> DataFrame:
-    """Write ``df`` as a parquet table bucketed (and by default sorted)
-    on ``keys``; returns the catalog-backed relation (bucket-aware).
+    """Write ``df`` as a parquet table bucketed and sorted on ``keys``,
+    replacing any existing table of that name; returns the catalog-backed
+    relation (bucket-aware).
 
     ``path`` makes the table external (files survive the session; the
     catalog entry itself is per-session under the default in-memory
-    catalog — re-register by calling this again, the overwrite is the
-    idempotent re-layout)."""
+    catalog — register the existing files again with ``CREATE TABLE ...
+    CLUSTERED BY ... LOCATION``)."""
     keys = list(keys)
     writer = (
         df.repartition(n_buckets, *keys)
         .write.format("parquet")
-        .mode(mode)
+        .mode("overwrite")
         .bucketBy(n_buckets, keys[0], *keys[1:])
+        .sortBy(keys[0], *keys[1:])
     )
-    if sort:
-        writer = writer.sortBy(keys[0], *keys[1:])
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
     return df.sparkSession.table(table)
-
-
-def is_registered(spark: SparkSession, table: str) -> bool:
-    """True if ``table`` exists in the current session catalog."""
-    return spark.catalog.tableExists(table)

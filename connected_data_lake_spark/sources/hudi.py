@@ -70,6 +70,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from connected_data_lake_spark.session import prepare_session
+from connected_data_lake_spark.sources.manifest import LocalFsStore
+from connected_data_lake_spark.sources.staging import stage_parquet, write_single_parquet
 
 #: completed timeline actions that contribute file slices
 _FILE_ACTIONS = ("commit", "replacecommit")
@@ -955,8 +957,6 @@ def write_hudi(
     scan metadata — the same planning-sized pattern as the Delta/
     Iceberg DML engines.
     """
-    import glob
-    import shutil
     import uuid as _uuid
 
     from pyspark.sql import functions as F
@@ -1015,44 +1015,6 @@ def write_hudi(
     stats: dict[str, list] = {}
     replaced: dict[str, list] = {}
 
-    def _fanout(out_df, fid_prefix: str) -> None:
-        """Distributed hive-fanout write; one new file group per output
-        file, partition path recovered from the alias dirs."""
-        staging = os.path.join(root, f".staging_{token}")
-        aliases = [f"__hpart_{c}" for c in partition_by]
-        w = out_df
-        writer = w.write.mode("overwrite")
-        if partition_by:
-            w = w.select(
-                "*", *[F.col(c).alias(a) for c, a in zip(partition_by, aliases)]
-            )
-            writer = w.write.mode("overwrite").partitionBy(*aliases)
-        writer.parquet(staging)
-        idx = 0
-        for d, _dirs, names in os.walk(staging):
-            rel_dir = os.path.relpath(d, staging)
-            part = (
-                ""
-                if rel_dir == "."
-                else "/".join(
-                    seg.split("=", 1)[1] for seg in rel_dir.split(os.sep)
-                )
-            )
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                fid = f"{fid_prefix}-{token}-{idx}"
-                rel = f"{fid}_0-1-0_{instant}.parquet"
-                if part:
-                    os.makedirs(os.path.join(root, part), exist_ok=True)
-                    rel = f"{part}/{rel}"
-                os.replace(os.path.join(d, name), os.path.join(root, rel))
-                stats.setdefault(part, []).append(
-                    {"fileId": fid, "path": rel}
-                )
-                idx += 1
-        shutil.rmtree(staging, ignore_errors=True)
-
     def _rewrite_slice(part: str, fid: str, slice_rel: str, upserts_df):
         """COW-rewrite one file group: old slice rows with matched keys
         replaced by the upsert rows, written as a NEW slice of the SAME
@@ -1071,14 +1033,10 @@ def write_hudi(
             upserts_df.select(*meta_cols, *data_cols_of(upserts_df)),
             allowMissingColumns=True,
         )
-        stage = os.path.join(root, f".staging_{token}_{fid}")
-        merged.coalesce(1).write.mode("overwrite").parquet(stage)
-        partfile = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
         rel = f"{fid}_0-1-0_{instant}.parquet"
         if part:
             rel = f"{part}/{rel}"
-        os.replace(partfile, os.path.join(root, rel))
-        shutil.rmtree(stage, ignore_errors=True)
+        write_single_parquet(merged, os.path.join(root, rel))
         stats.setdefault(part, []).append({"fileId": fid, "path": rel})
 
     def data_cols_of(d):
@@ -1091,11 +1049,11 @@ def write_hudi(
     out = df.select(*meta_cols, *data_cols_of(df))
 
     if mode == "insert" or not exists:
-        _fanout(out, "i")
+        _write_file_groups(out, root, token, instant, "i", stats, partition_by)
     elif mode == "overwrite":
         for part, fid, _rel in _live_slices(root, None):
             replaced.setdefault(part, []).append(fid)
-        _fanout(out, "o")
+        _write_file_groups(out, root, token, instant, "o", stats, partition_by)
     else:  # upsert on an existing table
         live = _live_slices(root, None)
         spark = df.sparkSession
@@ -1136,7 +1094,9 @@ def write_hudi(
             )
         if inserts.limit(1).count():
             out_ins = inserts.select(*meta_cols, *data_cols_of(inserts))
-            _fanout(out_ins, "i")
+            _write_file_groups(
+                out_ins, root, token, instant, "i", stats, partition_by
+            )
 
     action = "replacecommit" if (mode == "overwrite" and exists) else "commit"
     commit_meta: dict = {
@@ -1174,24 +1134,43 @@ _AVRO_OF_SPARK = {
 
 
 def _commit_instant(hoodie_dir: str, file_name: str, meta: dict) -> None:
-    """Put-if-absent commit of one completed instant: write the commit
-    metadata to a private temp file, then ``os.link`` it to
-    ``<hoodie_dir>/<file_name>`` — the link fails if a concurrent writer
-    already completed that instant (the shared tail of every Hudi
-    commit)."""
-    import uuid as _uuid
-
-    tmp = os.path.join(hoodie_dir, f".tmp-{_uuid.uuid4().hex}.json")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, os.path.join(hoodie_dir, file_name))
-    except FileExistsError:
+    """Put-if-absent commit of one completed instant as
+    ``<hoodie_dir>/<file_name>`` — fails if a concurrent writer already
+    completed that instant (the shared tail of every Hudi commit)."""
+    if not LocalFsStore(hoodie_dir).put_if_absent(
+        file_name, json.dumps(meta).encode()
+    ):
         raise RuntimeError(
             f"concurrent Hudi commit took instant {file_name}; re-run"
         )
-    finally:
-        os.unlink(tmp)
+
+
+def _write_file_groups(
+    df, root: str, token: str, instant: str, fid_prefix: str, stats: dict,
+    partition_by=(),
+) -> None:
+    """Distributed write of ``df`` as new file groups at ``instant``, one
+    per output file, hive-fanned out on ``partition_by`` (the data files
+    keep the partition columns); each group is added to the commit's
+    ``partitionToWriteStats`` entries ``stats``: ``{partition path:
+    [{fileId, path}]}``."""
+
+    def place(i: int, rel_dir: str) -> str:
+        # the partition path is the escaped dir values, col= dropped
+        part = "/".join(seg.split("=", 1)[1] for seg in rel_dir.split("/") if seg)
+        fid = f"{fid_prefix}-{token}-{i}"
+        rel = f"{fid}_0-1-0_{instant}.parquet"
+        rel = f"{part}/{rel}" if part else rel
+        stats.setdefault(part, []).append({"fileId": fid, "path": rel})
+        return os.path.join(root, rel)
+
+    stage_parquet(
+        df,
+        os.path.join(root, f".staging_{token}"),
+        place,
+        partition_by,
+        keep_partition_columns=True,
+    )
 
 
 def _avro_block_schema(df_schema, record_key: str) -> dict:
@@ -1242,7 +1221,6 @@ def _hudi_mor_apply(
     with the combined write stats; :func:`read_hudi_mor` merges it by
     (instant, version) order, newest write winning per key.
     """
-    import shutil
     import uuid as _uuid
 
     import pandas as pd
@@ -1387,22 +1365,9 @@ def _hudi_mor_apply(
                 F.lit(instant).alias("_hoodie_commit_time"),
                 F.col(record_key).cast("string").alias("_hoodie_record_key"),
             ]
-            staging = os.path.join(root, f".staging_{token}")
-            inserts.select(*meta_cols, *data_cols).write.mode(
-                "overwrite"
-            ).parquet(staging)
-            idx = 0
-            for name in sorted(os.listdir(staging)):
-                if not name.endswith(".parquet"):
-                    continue
-                fid = f"i-{token}-{idx}"
-                rel = f"{fid}_0-1-0_{instant}.parquet"
-                os.replace(
-                    os.path.join(staging, name), os.path.join(root, rel)
-                )
-                stats.setdefault("", []).append({"fileId": fid, "path": rel})
-                idx += 1
-            shutil.rmtree(staging, ignore_errors=True)
+            _write_file_groups(
+                inserts.select(*meta_cols, *data_cols), root, token, instant, "i", stats
+            )
 
     if not stats:
         return last  # nothing matched, nothing inserted: no commit
@@ -1468,7 +1433,6 @@ def compact_hudi_mor(spark: SparkSession, path: str) -> str:
     This is the INSERT_OVERWRITE form of compaction (whole-snapshot
     rewrite); Hudi's incremental per-file-group compaction is the
     upgrade path when only a few groups carry long chains."""
-    import shutil
     import uuid as _uuid
 
     from pyspark.sql import functions as F
@@ -1511,20 +1475,8 @@ def compact_hudi_mor(spark: SparkSession, path: str) -> str:
             "compaction needs hoodie.table.recordkey.fields naming a "
             "data column to restore _hoodie_record_key on the new base"
         )
-    staging = os.path.join(root, f".staging_{token}")
-    out.write.mode("overwrite").parquet(staging)
     stats: dict[str, list] = {}
-    idx = 0
-    for d, _dirs, names in os.walk(staging):
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            fid = f"c-{token}-{idx}"
-            rel = f"{fid}_0-1-0_{instant}.parquet"
-            os.replace(os.path.join(d, name), os.path.join(root, rel))
-            stats.setdefault("", []).append({"fileId": fid, "path": rel})
-            idx += 1
-    shutil.rmtree(staging, ignore_errors=True)
+    _write_file_groups(out, root, token, instant, "c", stats)
     meta = {
         "partitionToWriteStats": stats,
         "partitionToReplaceFileIds": replaced,

@@ -43,11 +43,9 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import struct
 import time
 import uuid
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -58,6 +56,8 @@ from connected_data_lake_spark.sources.iceberg import (
     IcebergStore,
     _latest_metadata_name,
 )
+from connected_data_lake_spark.sources.manifest import LocalFsStore
+from connected_data_lake_spark.sources.staging import stage_parquet
 
 #: Spark → Iceberg primitive type names (spec "Primitive Types").
 _SPARK_TO_ICE: list[tuple[type, str]] = [
@@ -329,50 +329,10 @@ def write_iceberg(
     # ---- data files (field-id-stamped parquet, identity fanout) -----------
     os.makedirs(os.path.join(path, "data"), exist_ok=True)
     os.makedirs(os.path.join(path, "metadata"), exist_ok=True)
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     token = uuid.uuid4().hex
-    staging = os.path.join(path, "data", f"_staging_{token}")
-    out = _with_field_ids(df, ids)
-    writer = out.write.mode("overwrite")
-    aliases = [f"__ipart_{c}" for c in partition_by]
-    if partition_by:
-        # duplicate partition columns under aliases: the fanout layout
-        # comes from the alias dirs, the data files keep EVERY column
-        # (identity source columns are stored in Iceberg data files)
-        from pyspark.sql import functions as F
-
-        out = out.select("*", *[
-            F.col(c).alias(a) for c, a in zip(partition_by, aliases)
-        ])
-        writer = out.write.mode("overwrite").partitionBy(*aliases)
-    writer.parquet(staging)
-
-    files: list[tuple[str, dict]] = []  # (relative data path, typed pvals)
-    idx = 0
-    for root, _dirs, names in os.walk(staging):
-        rel_dir = os.path.relpath(root, staging)
-        pvals: dict[str, object] = {}
-        if rel_dir != ".":
-            for seg in rel_dir.split(os.sep):
-                alias, _, raw = seg.partition("=")
-                col = alias[len("__ipart_"):]
-                if raw == "__HIVE_DEFAULT_PARTITION__":
-                    pvals[col] = None
-                else:
-                    t = dict(part_fields)[col]
-                    pvals[col] = (
-                        int(raw) if t in ("int", "long") else unquote(raw)
-                    )
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            new_rel = f"{token}-{idx:05d}.parquet"
-            os.replace(
-                os.path.join(root, name), os.path.join(path, "data", new_rel)
-            )
-            files.append((new_rel, pvals))
-            idx += 1
-    shutil.rmtree(staging, ignore_errors=True)
+    files = _stage_iceberg_data_files(
+        spark, path, df, partition_by, part_fields, ids, token
+    )
 
     # ---- snapshot numbering ------------------------------------------------
     if cur is None:
@@ -709,44 +669,36 @@ def _stage_iceberg_data_files(
     field-id-stamped footers and identity-partition fanout that KEEPS the
     partition source columns in the data files (alias-dir staging).
     Returns ``[(relative_name, partition_values)]``."""
-    from pyspark.sql import functions as F
-
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    staging = os.path.join(path, "data", f"_staging_{token}")
-    out = _with_field_ids(out_df, ids)
-    aliases = [f"__ipart_{c}" for c in partition_by]
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        out = out.select(
-            "*", *[F.col(c).alias(a) for c, a in zip(partition_by, aliases)]
+    placed = stage_parquet(
+        _with_field_ids(out_df, ids),
+        os.path.join(path, "data", f"_staging_{token}"),
+        lambda i, _d: os.path.join(path, "data", f"{token}-{i:05d}.parquet"),
+        partition_by,
+        keep_partition_columns=True,
+    )
+    types = dict(part_fields)
+    return [
+        (
+            os.path.basename(dest),
+            {
+                c: int(v) if v is not None and types[c] in ("int", "long") else v
+                for c, v in pvals.items()
+            },
         )
-        writer = out.write.mode("overwrite").partitionBy(*aliases)
-    writer.parquet(staging)
-    files: list[tuple[str, dict]] = []
-    idx = 0
-    for root, _dirs, names in os.walk(staging):
-        rel_dir = os.path.relpath(root, staging)
-        pvals: dict[str, object] = {}
-        if rel_dir != ".":
-            for seg in rel_dir.split(os.sep):
-                alias, _, raw = seg.partition("=")
-                col = alias[len("__ipart_"):]
-                if raw == "__HIVE_DEFAULT_PARTITION__":
-                    pvals[col] = None
-                else:
-                    t = dict(part_fields)[col]
-                    pvals[col] = int(raw) if t in ("int", "long") else unquote(raw)
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            new_rel = f"{token}-{idx:05d}.parquet"
-            os.replace(
-                os.path.join(root, name), os.path.join(path, "data", new_rel)
-            )
-            files.append((new_rel, pvals))
-            idx += 1
-    shutil.rmtree(staging, ignore_errors=True)
-    return files
+        for dest, _d, pvals in placed
+    ]
+
+
+def _stage_delete_files(out_df, path: str, token: str, kind: str) -> list[str]:
+    """Names of the ``<token>-<kind>-N.parquet`` delete files ``out_df``
+    is written as under ``<path>/data/``."""
+    placed = stage_parquet(
+        out_df,
+        os.path.join(path, "data", f"_staging_{token}"),
+        lambda i, _d: os.path.join(path, "data", f"{token}-{kind}-{i:05d}.parquet"),
+    )
+    return [os.path.basename(dest) for dest, _d, _v in placed]
 
 
 def _iceberg_data_entries(
@@ -802,21 +754,13 @@ def _commit_iceberg_metadata(
     before it is linked into place) + atomic version-hint update: the
     shared tail of every Iceberg commit."""
     meta_ver = prev_ver + 1
-    tmp = os.path.join(path, "metadata", f".tmp-{token}.json")
-    with open(tmp, "w") as fh:
-        json.dump(new_meta, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    final = os.path.join(path, "metadata", f"v{meta_ver}.metadata.json")
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
+    if not LocalFsStore(os.path.join(path, "metadata")).put_if_absent(
+        f"v{meta_ver}.metadata.json", json.dumps(new_meta).encode()
+    ):
         raise RuntimeError(
             f"concurrent Iceberg commit took v{meta_ver} under {path}; "
             "re-run the operation (its staged files are orphaned, not live)"
         )
-    finally:
-        os.unlink(tmp)
     hint = os.path.join(path, "metadata", f".tmp-hint-{token}")
     with open(hint, "w") as fh:
         fh.write(str(meta_ver))
@@ -1149,21 +1093,7 @@ def _mor_mark_matching_iceberg(
             .sortWithinPartitions("file_path", "pos"),
             {"file_path": 2147483546, "pos": 2147483545},
         )
-        staging = os.path.join(path, "data", f"_staging_{token}")
-        out.write.mode("overwrite").parquet(staging)
-        del_files: list[str] = []
-        idx = 0
-        for root, _dirs, names in os.walk(staging):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                rel = f"{token}-del-{idx:05d}.parquet"
-                os.replace(
-                    os.path.join(root, name), os.path.join(path, "data", rel)
-                )
-                del_files.append(rel)
-                idx += 1
-        shutil.rmtree(staging, ignore_errors=True)
+        del_files = _stage_delete_files(out, path, token, "del")
         # delete manifest under an UNPARTITIONED spec: spec-compliant
         # global scope (see _unpartitioned_spec) — never an all-null
         # tuple under the partitioned default spec
@@ -1407,19 +1337,7 @@ def equality_delete_iceberg(
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     n_files = max(1, -(-n_keys // target_delete_file_rows))
     out = _with_field_ids(keys.coalesce(n_files), {c: id_of[c] for c in cols})
-    staging = os.path.join(path, "data", f"_staging_{token}")
-    out.write.mode("overwrite").parquet(staging)
-    del_files: list[str] = []
-    idx = 0
-    for root, _dirs, names in os.walk(staging):
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            rel = f"{token}-eqdel-{idx:05d}.parquet"
-            os.replace(os.path.join(root, name), os.path.join(path, "data", rel))
-            del_files.append(rel)
-            idx += 1
-    shutil.rmtree(staging, ignore_errors=True)
+    del_files = _stage_delete_files(out, path, token, "eqdel")
 
     from connected_data_lake_spark.plans.lakeops import iceberg_entry_schema
 

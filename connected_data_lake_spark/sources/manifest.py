@@ -91,12 +91,19 @@ class LocalFsStore(ConditionalPutStore):
             return f.read()
 
     def put_if_absent(self, key: str, data: bytes) -> bool:
-        os.makedirs(os.path.dirname(os.path.join(self.root, key)) or self.root, exist_ok=True)
-        tmp = os.path.join(self.root, f".tmp-{uuid.uuid4().hex}")
+        """Write ``data`` to a temp file beside the key and sync it, then
+        ``link(2)`` it onto the key: readers see the whole blob or no key,
+        and a published key survives a crash."""
+        final = os.path.join(self.root, key)
+        parent = os.path.dirname(final) or "."
+        os.makedirs(parent, exist_ok=True)
+        tmp = os.path.join(parent, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "wb") as f:
             f.write(data)
+            f.flush()
+            os.fsync(f.fileno())
         try:
-            os.link(tmp, os.path.join(self.root, key))
+            os.link(tmp, final)
             return True
         except FileExistsError:
             return False

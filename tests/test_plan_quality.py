@@ -9,9 +9,12 @@ accidental nested-loop/cartesian explosions, whole-stage codegen coverage.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from connected_data_lake_spark.plans import all_specs, spec_of
+from connected_data_lake_spark.sources.tables import load_table
 
 SPECS = all_specs()
 
@@ -76,6 +79,41 @@ def test_bucketed_join_has_no_exchange_on_join_inputs(spark, sf_dir):
     assert plan.count("Bucketed: true") == 2
     join_part = plan.split("SortMergeJoin", 1)[1]
     assert "Exchange" not in join_part, "join input was re-shuffled"
+
+
+def test_bucketed_layout_is_registered_not_rewritten(spark, sf_dir):
+    """A session whose catalog lacks the bucketed tables registers them
+    over the built-once files; it never rewrites files that another
+    session may be reading."""
+    from connected_data_lake_spark.plans import extensions as X
+
+    X._bucketed_order_tables(spark, sf_dir)
+    path = X._built(
+        "bkt", sf_dir, ("orders", "lineitem"),
+        lambda _p: pytest.fail("bucketed layout was not built once"),
+    )
+
+    def files() -> dict[str, tuple[int, int]]:
+        out = {}
+        for d, _dirs, names in os.walk(path):
+            for n in names:
+                st = os.stat(os.path.join(d, n))
+                out[os.path.relpath(os.path.join(d, n), path)] = (
+                    st.st_ino, st.st_mtime_ns
+                )
+        return out
+
+    before = files()
+    assert any(n.endswith(".parquet") for n in before)
+    for t in spark.catalog.listTables():
+        if t.name.startswith("cdl_bkt_"):
+            spark.sql(f"DROP TABLE {t.name}")
+    X._BUCKETED_CACHE.clear()
+    o, li = X._bucketed_order_tables(spark, sf_dir)
+    assert files() == before
+    assert o.count() == load_table(spark, sf_dir, "orders").count()
+    assert li.count() == load_table(spark, sf_dir, "lineitem").count()
+    test_bucketed_join_has_no_exchange_on_join_inputs(spark, sf_dir)
 
 
 def test_contamination_scan_broadcasts_eval_dictionary(spark, sf_dir):
